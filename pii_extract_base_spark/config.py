@@ -70,9 +70,15 @@ def get_spark(app_name: str = "pii-extract-base-spark",
         # pin the heap (-Xms == -Xmx): heap grow/uncommit cycles turn
         # into kernel page-fault/compaction churn that shows up as
         # 50-80% system time at high core counts on virtualized hosts;
+        # ParallelGC for the same reason: G1 spreads its eden regions
+        # over the whole pinned heap, so a job that allocates little
+        # (the one-UDF pipeline) faults in fresh pages, and its RSS
+        # grows, for its first ~10 runs; ParallelGC reuses one
+        # contiguous eden, so RSS is flat from the first run on;
         # derby.system.home keeps the metastore next to the warehouse
         .config("spark.driver.extraJavaOptions",
-                "-Xms" + os.environ.get("SPARK_DRIVER_MEMORY", "8g")
+                "-XX:+UseParallelGC -Xms"
+                + os.environ.get("SPARK_DRIVER_MEMORY", "8g")
                 + " -Dderby.system.home="
                 + os.environ.get("SPARK_WAREHOUSE_DIR",
                                  "/tmp/pii_spark_warehouse"))

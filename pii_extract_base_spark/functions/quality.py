@@ -1,12 +1,13 @@
 """Gopher/C4-style heuristic quality rules (north-star stage N3).
 
-The rule DEFINITIONS live here once, with three renderings that must stay
-in lockstep (asserted by tests/test_pipeline_parity.py):
+The rule DEFINITIONS live here once, with three renderings:
 
- - `rules_python(text, lang)`  — pure-Python oracle / kernel
- - `rules_columns()`           — native Spark SQL Column expressions
-   (NOT a UDF: keeps the whole rule vector inside Catalyst/codegen so
-   predicate pushdown and column pruning see it, SURVEY.md §4)
+ - `rules_python(text, lang)`  — pure-Python kernel: the pipeline runs
+   it inside its one Arrow UDF (operators/detect.make_fused_udf), and
+   the oracle runs it directly
+ - `rules_columns()`           — native Spark SQL Column expressions,
+   off the pipeline path (q11, perfbench); agrees with `rules_python`
+   on ASCII-whitespace text (tests/test_pipeline_parity.py)
  - `rules_duckdb_sql()`        — ANSI/DuckDB SQL for the driver oracle
 
 Thresholds follow Gopher (Rae et al. 2021, arXiv:2112.11446) and C4
@@ -85,8 +86,14 @@ def rules_python(text: str, lang: str) -> Dict[str, bool]:
 def rules_columns(text_col: str = "text", lang_col: str = "lang"):
     """Return {rule_name: Column} of native Spark expressions.
 
-    Everything stays inside WholeStageCodegen; `.explain` shows no
-    BatchEvalPython for this stage.
+    No Python UDF: `.explain` shows no BatchEvalPython for this stage
+    (the array higher-order functions do run interpreted, outside
+    WholeStageCodegen). Not on the QualityPipeline path, which runs
+    `rules_python`. Words split on ASCII whitespace only (Java
+    ``\\s``) and line trims strip spaces only (Spark ``trim``), where
+    `rules_python` uses Python's Unicode-aware ``str.split``/``strip``:
+    text with tabs around bullets, ellipses or blank lines, or with
+    NBSP/NEL between words, can get different rule values here.
     """
     from pyspark.sql import functions as F
 

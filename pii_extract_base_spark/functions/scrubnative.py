@@ -3,15 +3,11 @@ kernel/scrub.py (semantics fixed there: sort (start asc, end desc),
 drop overlaps, replace kept spans with ``<TYPE>``), byte-identical by
 the parity tests.
 
-Why it exists (r4 hot-path work): the fused Arrow UDF used to compute
-the scrubbed text in Python and ship the FULL text back through the
-JVM↔Arrow conversion a second time. The detect stage already returns
-the entity spans, and rebuilding the scrubbed string from
-(text, spans) is a pure fold — so doing it as a native higher-order-
-function expression removes ~len(text) bytes/row from the Arrow
-return path (round 3 measured that conversion, not the Python
-kernels, as the crossing's dominant cost) and keeps the scrub inside
-codegen next to the rules/keep expressions.
+Off the pipeline path: QualityPipeline scrubs in Python inside its one
+Arrow UDF (operators/detect.make_fused_udf), where the text already is;
+this fold of array higher-order functions runs interpreted, outside
+whole-stage codegen. It is kept for direct use on a table that already
+holds (text, entity spans), and for perfbench's per-layer probe.
 """
 
 from pyspark.sql import Column, functions as F

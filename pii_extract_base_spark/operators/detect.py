@@ -14,8 +14,9 @@ and immune to regex-pickling issues.
 """
 
 import json
-from typing import Dict, List, Optional, Tuple
+from typing import Dict, Iterator, List, Optional, Tuple
 
+from ..functions.quality import RULE_NAMES, rules_python
 from ..kernel.model import PiiCollectionBuilder
 from ..kernel.task import DocumentChunk
 from ..kernel.processor import PiiProcessor
@@ -29,9 +30,6 @@ ENTITY_FIELDS = ("type", "subtype", "value", "start", "end", "lang",
 ENTITY_STRUCT = ("struct<type:string,subtype:string,value:string,"
                  "start:long,end:long,lang:string,country:string,"
                  "detector:int,method:string,stage:string>")
-
-DETECT_RESULT_SCHEMA = (f"struct<entities:array<{ENTITY_STRUCT}>,"
-                        f"scrubbed_text:string,n_entities:int>")
 
 _PROC_CACHE: Dict[tuple, PiiProcessor] = {}
 
@@ -48,22 +46,16 @@ def get_processor(languages: Tuple[str, ...],
     return proc
 
 
-def process_page(proc: PiiProcessor, text: str, lang: str,
-                 url: str, do_scrub: bool = True) -> Tuple[List[Dict], str]:
-    """Detect entities on one page and scrub them. Returns
-    (entity dicts with ENTITY_FIELDS, scrubbed text — or None when
-    ``do_scrub`` is off: the fused pipeline rebuilds the scrub
-    NATIVELY from the spans, so the Python copy would be dead work)."""
-    text = text or ""
-    chunk = DocumentChunk(id="0", data=text)
-    piic = PiiCollectionBuilder(lang=lang, docid=url)
+def detect_entities(proc: PiiProcessor, chunk: DocumentChunk, lang: str,
+                    docid: str) -> Iterator[Tuple[Dict, object]]:
+    """Detect on one chunk; yields (entity dict with ENTITY_FIELDS,
+    its detector) per entity, in collection order."""
+    piic = PiiCollectionBuilder(lang=lang, docid=docid)
     proc.detect_chunk(chunk, piic, default_lang=lang)
-
-    ents = []
     for p in piic:
         d = p.asdict()
         det = piic.get_detector(d["detector"])
-        ents.append({
+        yield {
             "type": d["type"],
             "subtype": d.get("subtype"),
             "value": d["value"],
@@ -74,12 +66,23 @@ def process_page(proc: PiiProcessor, text: str, lang: str,
             "detector": d["detector"],
             "method": det.method,
             "stage": d.get("process", {}).get("stage"),
-        })
+        }, det
 
-    if not do_scrub:
-        return ents, None
-    spans = [(e["start"], e["end"], e["type"]) for e in ents]
-    return ents, scrub_text(text, spans)
+
+def _scrub(text: str, ents: List[Dict]) -> str:
+    return scrub_text(text, [(e["start"], e["end"], e["type"])
+                             for e in ents])
+
+
+def process_page(proc: PiiProcessor, text: str, lang: str,
+                 url: str, do_scrub: bool = True) -> Tuple[List[Dict], str]:
+    """Detect entities on one page and scrub them. Returns
+    (entity dicts with ENTITY_FIELDS, scrubbed text — or None when
+    ``do_scrub`` is off)."""
+    text = text or ""
+    ents = [e for e, _ in detect_entities(
+        proc, DocumentChunk(id="0", data=text), lang, url)]
+    return ents, (_scrub(text, ents) if do_scrub else None)
 
 
 def detect_batch(texts, langs, urls, languages: Tuple[str, ...],
@@ -96,50 +99,31 @@ def detect_batch(texts, langs, urls, languages: Tuple[str, ...],
     return all_ents, scrubbed, counts
 
 
-def make_detect_udf(languages: Tuple[str, ...],
-                    config_json: Optional[str] = None):
-    """Arrow pandas UDF (Series×3 → struct). Only (text, lang, url) cross
-    the JVM↔Python boundary — Catalyst prunes every other column out of
-    the Arrow transfer."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+# the whole per-row result of the pipeline's one Python crossing:
+# scores, the rule vector (RULE_NAMES order), entities and the scrub
+RULES_STRUCT = ("struct<" + ",".join(f"{n}:boolean" for n in RULE_NAMES)
+                + ">")
 
-    langs_t = tuple(languages)
-
-    @pandas_udf(DETECT_RESULT_SCHEMA)
-    def detect_udf(text: pd.Series, lang: pd.Series,
-                   url: pd.Series) -> pd.DataFrame:
-        ents, scrubbed, counts = detect_batch(
-            text.tolist(), lang.tolist(), url.tolist(), langs_t, config_json)
-        return pd.DataFrame({
-            "entities": ents,
-            "scrubbed_text": scrubbed,
-            "n_entities": counts,
-        })
-
-    return detect_udf
-
-
-# NOTE: no scrubbed_text — the pipeline rebuilds it NATIVELY from the
-# entity spans (functions/scrubnative.scrub_expr), so the full text
-# never crosses the Arrow boundary a second time (r4 hot-path cut)
 FUSED_RESULT_SCHEMA = (
     "struct<lang_pred:string,lang_conf:double,logppl:double,"
+    f"rules:{RULES_STRUCT},"
     f"entities:array<{ENTITY_STRUCT}>,"
-    "n_entities:int>")
+    "n_entities:int,scrubbed_text:string>")
 
 
 def make_fused_udf(languages: Tuple[str, ...],
                    config_json: Optional[str] = None):
-    """Score + detect in ONE Arrow crossing.
+    """All of a row's Python work in ONE Arrow crossing: langid+ppl
+    (one shared n-gram pass), the quality rules, detect and scrub —
+    the same kernels `oracle.oracle_page` calls, so the pipeline
+    equals the oracle by construction.
 
     The JVM-side row<->Arrow conversion around each ArrowEvalPython
-    stage costs more than the Python kernels themselves once those are
-    vectorized (measured: the JVM burned ~14 cores feeding two chained
-    UDF stages while python workers sat ~15% busy). Shipping `text`
-    once and returning one combined struct halves that conversion
-    work; langid+perplexity still share their single n-gram pass, and
-    the native rules stage stays outside, visible to Catalyst.
+    stage costs more than the vectorized Python kernels, and the
+    native renderings of the rules and scrub are array higher-order
+    functions that Spark interprets outside whole-stage codegen; both
+    are cheaper here, where `text` is already in Python. Only the
+    keep/reasons decision stays native, over this struct's fields.
     """
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -151,15 +135,16 @@ def make_fused_udf(languages: Tuple[str, ...],
     @pandas_udf(FUSED_RESULT_SCHEMA)
     def fused_udf(text: pd.Series, lang: pd.Series,
                   url: pd.Series) -> pd.DataFrame:
-        texts = text.tolist()
+        texts, lgs = text.tolist(), lang.tolist()
         preds, confs, ppls = score_batch(texts)
-        ents, _none, counts = detect_batch(
-            texts, lang.tolist(), url.tolist(), langs_t, config_json,
-            do_scrub=False)
+        ents, scrubbed, counts = detect_batch(
+            texts, lgs, url.tolist(), langs_t, config_json)
         return pd.DataFrame({
             "lang_pred": preds, "lang_conf": confs, "logppl": ppls,
+            "rules": [rules_python(t, lg) for t, lg in zip(texts, lgs)],
             "entities": ents,
             "n_entities": counts,
+            "scrubbed_text": scrubbed,
         })
 
     return fused_udf
@@ -197,15 +182,11 @@ def make_chunk_detect_udf(languages: Tuple[str, ...],
     def chunk_udf(chunk_id: pd.Series, text: pd.Series,
                   before: pd.Series, after: pd.Series,
                   lang: pd.Series, docid: pd.Series) -> pd.DataFrame:
-        proc_cache = {}
+        proc = get_processor(langs_t, config_json)
         all_ents, scrubbed, counts = [], [], []
         for cid, t, bf, af, lg, did in zip(
                 chunk_id.tolist(), text.tolist(), before.tolist(),
                 after.tolist(), lang.tolist(), docid.tolist()):
-            proc = proc_cache.get(lg)
-            if proc is None:
-                proc = get_processor(langs_t, config_json)
-                proc_cache[lg] = proc
             t = t or ""
             ctx = {}
             if bf is not None:
@@ -214,25 +195,14 @@ def make_chunk_detect_udf(languages: Tuple[str, ...],
                 ctx["after"] = af
             chunk = DocumentChunk(id=str(cid), data=t,
                                   context=ctx or None)
-            piic = PiiCollectionBuilder(lang=lg, docid=did)
-            proc.detect_chunk(chunk, piic, default_lang=lg)
             ents = []
-            for p in piic:
-                d = p.asdict()
-                det = piic.get_detector(d["detector"])
-                ents.append({
-                    "type": d["type"], "subtype": d.get("subtype"),
-                    "value": d["value"], "start": d["start"],
-                    "end": d["end"], "lang": d.get("lang"),
-                    "country": d.get("country"),
-                    "detector_key": "|".join(
-                        str(k or "") for k in det.key()),
-                    "method": det.method,
-                    "stage": d.get("process", {}).get("stage"),
-                })
-            spans = [(e["start"], e["end"], e["type"]) for e in ents]
+            for e, det in detect_entities(proc, chunk, lg, did):
+                del e["detector"]
+                e["detector_key"] = "|".join(
+                    str(k or "") for k in det.key())
+                ents.append(e)
             all_ents.append(ents)
-            scrubbed.append(scrub_text(t, spans))
+            scrubbed.append(_scrub(t, ents))
             counts.append(len(ents))
         return pd.DataFrame({"entities": all_ents,
                              "scrubbed_text": scrubbed,

@@ -28,10 +28,12 @@ The result is invariant to where the range boundaries fall, so the
 sampling that picks them never changes the answer.
 """
 
+from decimal import Decimal
 from typing import List, Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DecimalType, DoubleType
 
 from ..functions.textstats import token_count, words_col
 
@@ -120,17 +122,19 @@ def distributed_prefix_sum(df: DataFrame, val_col: str,
                   .agg(F.sum(val_col).alias("_ptotal")))
     # offset type follows F.sum's result type (long for integral
     # inputs, double/decimal otherwise) — truncating to long would
-    # silently corrupt prefix sums over fractional val_cols
-    sum_type = tot_df.schema["_ptotal"].dataType.simpleString()
-    trows = sorted((r["_pid"], r["_ptotal"] or 0)
-                   for r in tot_df.collect())
-    acc = 0
+    # silently corrupt prefix sums over fractional val_cols — so the
+    # running offset starts at that type's zero (the typed column
+    # rejects an int 0 for a double) and skips all-NULL buckets
+    sum_dt = tot_df.schema["_ptotal"].dataType
+    acc = (Decimal(0) if isinstance(sum_dt, DecimalType)
+           else 0.0 if isinstance(sum_dt, DoubleType) else 0)
     orows = []
-    for pid_v, ptot in trows:
-        orows.append((pid_v, acc))
-        acc = acc + ptot
-    offsets = spark.createDataFrame(orows,
-                                    f"_pid int, _offset {sum_type}")
+    for r in sorted(tot_df.collect(), key=lambda r: r["_pid"]):
+        orows.append((r["_pid"], acc))
+        if r["_ptotal"] is not None:
+            acc = acc + r["_ptotal"]
+    offsets = spark.createDataFrame(
+        orows, f"_pid int, _offset {sum_dt.simpleString()}")
 
     return (local.join(F.broadcast(offsets), "_pid")
                  .withColumn(out_col,

@@ -5,26 +5,25 @@ detect + scrub → keep/drop, as one declarative DataFrame plan.
 Physical shape (SURVEY.md §3.4):
 
   scan (parquet/Iceberg; prune lang partitions when present)
-    → repartition(N, salted url hash)          # skew mitigation (N9)
-    → score struct   [Arrow UDF #1: fused langid+ppl, text only]
-    → rules struct   [native SQL — stays in WholeStageCodegen]
-    → detect struct  [Arrow UDF #2: detect+context+scrub, text/lang/url]
-    → keep + reasons [native SQL]
+    → [optional] repartition(N, salted url hash)    # skew mitigation (N9)
+    → one struct [Arrow UDF: langid+ppl, rules, detect, scrub;
+                  ships only text/lang/url]
+    → keep + reasons [native SQL over the struct's fields]
 
-Exactly two Python crossings per row, each shipping only the columns it
-needs. Everything else is Catalyst's problem — and it solves it
-(predicate pushdown, column pruning; see tests/test_explain_plan.py).
+Exactly one Python crossing per row, running the same kernels as the
+pure-Python oracle (oracle.py), so the two agree by construction.
+Batch, the checkpointed sink, the CLI and the streaming variant all
+apply this one plan. Everything else is Catalyst's problem — and it
+solves it (predicate pushdown, column pruning; see
+tests/test_explain_plan.py).
 """
 
 from typing import Iterable, Optional
 
 from pyspark.sql import DataFrame, functions as F
 
-from .functions.quality import rules_struct_column
 from .functions.decision import decision_columns
-from .functions.scrubnative import scrub_expr
-from .operators.detect import make_detect_udf
-from .operators.score import make_score_udf
+from .operators.detect import make_fused_udf
 from .partitioning import salted_repartition
 
 DEFAULT_LANGUAGES = ("en", "es", "fr", "de")
@@ -38,30 +37,20 @@ OUTPUT_COLUMNS = [
 class QualityPipeline:
     """Configure once on the driver; apply to any pages DataFrame.
 
-    `fused=True` (default) runs langid+ppl+detect+scrub as ONE Arrow
-    crossing (see operators/detect.make_fused_udf): the JVM-side
-    row↔Arrow conversion around each ArrowEvalPython stage dominates
-    once the Python kernels are vectorized, so one crossing beats two.
-    `fused=False` keeps the two-stage plan (score pass, then detect
-    pass) — useful when only scores are needed downstream.
+    All Python work of a row — langid+ppl, the quality rules, detect
+    and scrub — runs in ONE Arrow crossing (operators/detect.
+    make_fused_udf); only keep/reasons are native expressions.
     """
 
     def __init__(self, languages: Iterable[str] = DEFAULT_LANGUAGES,
                  config_json: Optional[str] = None,
                  salt_partitions: Optional[int] = None,
-                 fused: bool = True,
                  from_html: bool = False):
         self.languages = tuple(languages)
         self.config_json = config_json
         self.salt_partitions = salt_partitions
-        self.fused = fused
         self.from_html = from_html
-        if fused:
-            from .operators.detect import make_fused_udf
-            self._fused_udf = make_fused_udf(self.languages, config_json)
-        else:
-            self._score_udf = make_score_udf()
-            self._detect_udf = make_detect_udf(self.languages, config_json)
+        self._fused_udf = make_fused_udf(self.languages, config_json)
 
     def __call__(self, pages: DataFrame) -> DataFrame:
         df = pages
@@ -73,45 +62,16 @@ class QualityPipeline:
         if self.salt_partitions:
             df = salted_repartition(df, "url", self.salt_partitions)
 
-        if self.fused:
-            sd = self._fused_udf(F.col("text"), F.col("lang"), F.col("url"))
-            df = df.withColumn("sd", sd)
-            score = F.col("sd")
-            detect = F.col("sd")
-        else:
-            df = df.withColumn("score", self._score_udf(F.col("text")))
-            df = df.withColumn(
-                "detect",
-                self._detect_udf(F.col("text"), F.col("lang"),
-                                 F.col("url")))
-            score = F.col("score")
-            detect = F.col("detect")
-        df = df.withColumn("rules", rules_struct_column("text", "lang"))
-
-        score_name = "sd" if self.fused else "score"
-        keep, reasons = decision_columns("rules", "lang", score_name)
-        df = (df
-              .withColumn("keep", keep)
-              .withColumn("reasons", reasons)
-              .select(
-                  "url", "warc_ts", "lang", "text",
-                  score.getField("lang_pred").alias("lang_pred"),
-                  score.getField("lang_conf").alias("lang_conf"),
-                  score.getField("logppl").alias("logppl"),
-                  "rules",
-                  detect.getField("entities").alias("entities"),
-                  detect.getField("n_entities").alias("n_entities"),
-                  # fused path: scrub natively from the spans so the
-                  # full text never crosses Arrow twice (scrubnative);
-                  # non-fused path keeps the UDF's Python scrub
-                  (scrub_expr(F.col("text"),
-                              detect.getField("entities"))
-                   if self.fused
-                   else detect.getField("scrubbed_text"))
-                  .alias("scrubbed_text"),
-                  "keep", "reasons",
-              ))
-        return df
+        df = df.withColumn("sd", self._fused_udf(
+            F.col("text"), F.col("lang"), F.col("url")))
+        keep, reasons = decision_columns("sd.rules", "lang", "sd")
+        sd = F.col("sd")
+        return df.select(
+            "url", "warc_ts", "lang", "text",
+            *[sd.getField(c).alias(c) for c in (
+                "lang_pred", "lang_conf", "logppl", "rules", "entities",
+                "n_entities", "scrubbed_text")],
+            keep.alias("keep"), reasons.alias("reasons"))
 
     def kept(self, pages: DataFrame) -> DataFrame:
         return self(pages).where(F.col("keep"))

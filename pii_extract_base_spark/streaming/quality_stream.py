@@ -1,25 +1,22 @@
 """Structured Streaming variant of the quality pipeline.
 
 The north rule is a batch job (SURVEY.md §2.4: checkpoint/resume covers
-recovery), but the same stage functions compose unchanged over
-readStream — pandas UDFs and native rule expressions are
-execution-mode agnostic. This module wires:
+recovery), but QualityPipeline's plan — one pandas UDF plus native
+decision expressions — is execution-mode agnostic, so the stream
+applies the very same plan. This module wires:
 
   file-source stream of pages parquet
-    → QualityPipeline stages (same UDFs)
+    → QualityPipeline (the batch plan, unchanged)
     → watermarked 1-minute windowed keep/entity counts
     → sink (memory/parquet), with checkpointLocation for exactly-once
 
 Use trigger(availableNow=True) for deterministic drain-the-source runs
-(how tests/test_streaming.py exercises it).
+(how tests/test_operators_extra.py exercises it).
 """
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.quality import rules_struct_column
-from ..functions.decision import decision_columns
-from ..operators.detect import make_detect_udf
-from ..operators.score import make_score_udf
+from ..pipeline import DEFAULT_LANGUAGES, QualityPipeline
 from ..sources.pages import PAGES_SCHEMA
 
 
@@ -30,22 +27,12 @@ def stream_pages(spark, input_dir: str) -> DataFrame:
 
 
 def apply_pipeline_stream(pages: DataFrame,
-                          languages=("en", "es", "fr", "de")) -> DataFrame:
-    """Same stages as pipeline.QualityPipeline, over a streaming DF."""
-    score_udf = make_score_udf()
-    detect_udf = make_detect_udf(tuple(languages))
-    df = (pages
-          .withColumn("score", score_udf(F.col("text")))
-          .withColumn("rules", rules_struct_column("text", "lang"))
-          .withColumn("detect", detect_udf(F.col("text"), F.col("lang"),
-                                           F.col("url"))))
-    keep, reasons = decision_columns("rules", "lang", "score")
-    return (df.withColumn("keep", keep)
-              .withColumn("reasons", reasons)
-              .select("url", "warc_ts", "lang",
-                      F.col("detect.n_entities").alias("n_entities"),
-                      F.col("detect.scrubbed_text").alias("scrubbed_text"),
-                      "keep"))
+                          languages=DEFAULT_LANGUAGES) -> DataFrame:
+    """QualityPipeline over a streaming (or batch) DF, narrowed to the
+    columns the windowed aggregation and sinks use."""
+    return (QualityPipeline(languages)(pages)
+            .select("url", "warc_ts", "lang", "n_entities",
+                    "scrubbed_text", "keep"))
 
 
 def windowed_keep_counts(scored: DataFrame,

@@ -400,6 +400,10 @@ def main() -> int:
     out = pipe(pages)
 
     if args.output:
+        # two tables, one pipeline run: cut lineage (lazily, like
+        # _pack_stats) so the entities write reads the rows the first
+        # write materialized instead of re-running the UDF
+        out = out.localCheckpoint(eager=False)
         (out.drop("rules", "entities")
             .write.mode("overwrite").parquet(f"{args.output}/pages_scored"))
         pipe_entities = out.selectExpr("url", "explode(entities) as e") \

@@ -191,8 +191,8 @@ charged only its non-stolen wall share, hypervisor steal measured
 from /proc/stat across the child process).
 
 Engine-side scaling levers (all in `pii_extract_base_spark/config.py`
-/ `pipeline.py`): one fused Arrow crossing for all Python kernels,
-native-SQL rule vector, 1-thread BLAS per worker, glibc
+/ `pipeline.py`): one fused Arrow crossing for all Python kernels
+(scores, rules, detect, scrub), 1-thread BLAS per worker, glibc
 mmap-threshold pinning, pinned JVM heap, 1 MiB JVM<->worker pipe
 buffers, AQE + salted repartition for skew. Per-doc kernel cost
 ~0.36 ms-core; the job is embarrassingly parallel — residual

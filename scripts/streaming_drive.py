@@ -2,8 +2,8 @@
 """At-scale Structured Streaming drive of the quality pipeline.
 
 Evidence script for the streaming checklist row: drains the full
-synthetic pages corpus through the SAME stage functions the batch
-pipeline uses (streaming/quality_stream.py), as a checkpointed
+synthetic pages corpus through the batch QualityPipeline itself
+(streaming/quality_stream.py applies it unchanged), as a checkpointed
 availableNow file-source stream split into multiple microbatches,
 then
 

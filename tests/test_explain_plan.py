@@ -1,8 +1,8 @@
 """Physical-plan assertions (SURVEY.md §4): the scale properties the
 engine is designed around must be visible in `explain("formatted")` —
 pushdown to the scan, broadcast joins for dimensions, WholeStageCodegen
-for native stages, exactly two Arrow crossings in the pipeline, each
-shipping only the columns it needs."""
+for native stages, exactly one Arrow crossing in the pipeline, shipping
+only the columns it needs."""
 
 from pyspark.sql import functions as F
 
@@ -52,7 +52,7 @@ def test_ivf_broadcasts_centroids(spark):
 
 
 def test_pipeline_single_arrow_crossing(spark):
-    """Fused pipeline: exactly ONE ArrowEvalPython stage, shipping only
+    """The pipeline: exactly ONE ArrowEvalPython stage, shipping only
     (text, lang, url) — never html/warc_ts (column pruning into the
     UDF input)."""
     from pii_extract_base_spark.pipeline import QualityPipeline
@@ -66,17 +66,10 @@ def test_pipeline_single_arrow_crossing(spark):
     # schema carries it, but it is not a UDF argument)
     flat = {c for cols in inputs for c in cols}
     assert "html" not in flat, inputs
-
-
-def test_pipeline_unfused_also_one_stage(spark):
-    """Even with separate score/detect UDFs, Catalyst's
-    ExtractPythonUDFs batches independent Python UDFs into a single
-    ArrowEvalPython stage (shared input transfer) — the plan-level
-    guarantee that the text column never crosses twice."""
-    from pii_extract_base_spark.pipeline import QualityPipeline
-    from pii_extract_base_spark.sources.pages import synth_pages
-    out = QualityPipeline(fused=False)(synth_pages(spark, SF_DIR))
-    assert len(arrow_eval_inputs(formatted_plan(out))) == 1
+    # rules and scrub run inside that one UDF: neither the native
+    # rules' stopword intersection nor the scrub fold is in the plan
+    assert count_nodes(plan, "array_intersect") == 0, plan[:800]
+    assert count_nodes(plan, r"aggregate\(") == 0, plan[:800]
 
 
 def test_textstats_native_no_python(spark):

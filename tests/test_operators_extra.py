@@ -129,6 +129,19 @@ def test_streaming_pipeline(spark, tmp_path):
     assert sum(r.n_docs for r in rows) == 200
     assert any(r.keep for r in rows) and any(not r.keep for r in rows)
 
+    # the stream applies the batch plan: same per-(lang, keep) totals
+    from pii_extract_base_spark.pipeline import QualityPipeline
+    stream_tot = {}
+    for r in rows:
+        d, e = stream_tot.get((r.lang, r.keep), (0, 0))
+        stream_tot[(r.lang, r.keep)] = (d + r.n_docs, e + r.n_entities)
+    batch = (QualityPipeline()(spark.read.parquet(pages_dir))
+             .groupBy("lang", "keep")
+             .agg(F.count("*").alias("n_docs"),
+                  F.sum("n_entities").alias("n_entities")).collect())
+    assert stream_tot == {(r.lang, r.keep): (r.n_docs, r.n_entities)
+                          for r in batch}
+
 
 def test_collection_json_sink(spark, tmp_path):
     from pii_extract_base_spark.pipeline import QualityPipeline
@@ -1016,6 +1029,37 @@ def test_distributed_prefix_sum_and_shards(spark):
              docs, budget=10, num_partitions=2)).collect()}
     assert m[0].n_docs == 2 and m[0].n_tokens == 12
     assert m[1].first_doc == 3 and m[1].last_doc == 3
+
+
+def test_distributed_prefix_sum_fractional(spark):
+    """A fractional ``val_col`` (double, decimal) keeps its sum type in
+    the offsets: the first bucket's zero offset and an all-NULL
+    bucket's total are that type's zero, not the int 0 that
+    createDataFrame rejects for a double column."""
+    import random
+    from decimal import Decimal
+    from pii_extract_base_spark.operators.sharding import (
+        distributed_prefix_sum)
+    rng = random.Random(11)
+    # quarters are exact in binary, so any summation order is exact
+    vals = [(i, None if i < 30 else rng.randrange(0, 40) / 4)
+            for i in range(120)]
+    for typ, conv in (("double", float),
+                      ("decimal(10,2)", lambda v: Decimal(str(v)))):
+        df = spark.createDataFrame(
+            [(k, None if v is None else conv(v)) for k, v in vals],
+            f"k long, v {typ}")
+        for nparts in (1, 4):
+            got = {r.k: r.cum for r in
+                   distributed_prefix_sum(df, "v", "k",
+                                          num_partitions=nparts)
+                   .collect()}
+            run = 0.0
+            for k, v in vals:
+                run += v or 0.0
+                if v is None:
+                    continue
+                assert float(got[k]) == run, (typ, nparts, k)
 
 
 def test_bloom_prune_antijoin(spark):

@@ -1,7 +1,9 @@
 """Engine-vs-oracle parity on the synthetic pages corpus (BASELINE.md):
 byte-identical scrubbed text per url, identical entity dicts, identical
 keep/drop (F1 must be 1.0 — shared kernel), rule vector equality between
-native-Spark SQL and pure-Python renderings.
+the native-Spark SQL rendering (off the pipeline path) and the
+pure-Python one, and pipeline-vs-oracle parity on whitespace the two
+renderings treat differently.
 """
 
 import math
@@ -53,10 +55,67 @@ def test_keep_f1_is_one(results):
     assert f1 == 1.0
 
 
-def test_rules_native_vs_python(results):
-    for row in results:
-        exp = oracle_page(row.text, row.lang, row.url, DEFAULT_LANGUAGES)
-        assert row.rules.asDict() == exp["rules"], row.url
+def test_rules_native_vs_python(spark, results):
+    """rules_struct_column (q11 and perfbench use the native rendering)
+    equals rules_python over the same pages."""
+    from pii_extract_base_spark.functions.quality import (
+        rules_python, rules_struct_column)
+    pages = spark.createDataFrame([(r.url, r.text, r.lang)
+                                   for r in results],
+                                  "url string, text string, lang string")
+    native = pages.select("url", "text", "lang",
+                          rules_struct_column("text", "lang").alias("r"))
+    rows = native.collect()
+    assert len(rows) == N_DOCS
+    for row in rows:
+        assert row.r.asDict() == rules_python(row.text, row.lang), row.url
+
+
+# Whitespace Python's str.split/strip treat as such but Java's \s and
+# Spark's trim do not: the pipeline must follow the oracle here.
+_SENT = ("the people of the town went to the market and bought some "
+         "bread with the money that they had saved for the week")
+WHITESPACE_CASES = {
+    "tab_only_lines": "\n".join(
+        ["The cat sat on the mat and the dog lay by the warm door.",
+         "\t\t", "\t\t",
+         "It was a quiet day in the town and all of the people were in.",
+         "\t\t", "\t\t",
+         "We went to the market for some bread and milk for the week."]),
+    "nbsp_words": _SENT.replace(" ", "\u00a0"),
+    "nel_words": _SENT.replace(" ", "\u0085"),
+    "tab_before_bullet": "\n".join(
+        f"\t- item {i} is one of the things that the people of the town "
+        f"like and use" for i in range(8)),
+    "tab_after_ellipsis": "\n".join(
+        f"and then {i} of them went home to the town in the rain...\t"
+        for i in range(8)),
+    "null_text": None,
+    "empty_text": "",
+}
+
+
+@pytest.fixture(scope="module")
+def whitespace_results(spark):
+    import datetime
+    ts = datetime.datetime(2024, 1, 1)
+    pages = spark.createDataFrame(
+        [(f"https://ws.example/{name}", ts, text, "en")
+         for name, text in WHITESPACE_CASES.items()],
+        "url string, warc_ts timestamp, text string, lang string")
+    return {r.url.rsplit("/", 1)[1]: r
+            for r in QualityPipeline(DEFAULT_LANGUAGES)(pages).collect()}
+
+
+@pytest.mark.parametrize("case", sorted(WHITESPACE_CASES))
+def test_whitespace_pages_match_oracle(whitespace_results, case):
+    row = whitespace_results[case]
+    exp = oracle_page(WHITESPACE_CASES[case], "en", row.url,
+                      DEFAULT_LANGUAGES)
+    assert row.rules.asDict() == exp["rules"]
+    assert row.keep == exp["keep"]
+    assert list(row.reasons) == exp["reasons"]
+    assert row.scrubbed_text == exp["scrubbed_text"]
 
 
 def test_scores_match(results):

@@ -48,6 +48,29 @@ def _drive(monkeypatch, argv):
     line = out.getvalue().strip().splitlines()[-1]
     return json.loads(line)
 
+
+def _python_executions(spark):
+    """{execution id: plan runs an Arrow UDF?} for every SQL execution
+    the session's status store holds."""
+    lst = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return {e.executionId(): "ArrowEvalPython" in e.physicalPlanDescription()
+            for e in (lst.apply(i) for i in range(lst.size()))}
+
+
+def test_output_runs_pipeline_once(spark, monkeypatch, tmp_path):
+    """--output writes pages_scored and entities from ONE run of the
+    pipeline's Arrow UDF, not one per table."""
+    before = set(_python_executions(spark))
+    out_dir = str(tmp_path / "out")
+    summary = _drive(monkeypatch, [
+        "run_pipeline", "--sf-dir", SF_DIR, "--limit", "120",
+        "--output", out_dir])
+    assert summary["docs"] == 120 and summary["entities"] > 0
+    runs = [i for i, py in _python_executions(spark).items()
+            if py and i not in before]
+    assert len(runs) <= 1, runs
+
+
 def test_pack_stage_emits_fixed_length_examples(spark, monkeypatch):
     """--pack SEQ_LEN: kept pages' scrubbed text → concat-and-chunk
     examples in one submit. The no-pad invariant reaches the CLI: every
