@@ -1,7 +1,10 @@
 """keep/drop decision (north-star N7): conjunction of language agreement,
 language confidence, perplexity band, and all hard quality rules, with
-reason codes. Two renderings kept in lockstep: native Spark expressions
-(no UDF) and the pure-Python oracle."""
+reason codes. `decide_python` is the decision: the pipeline's fused UDF
+and the oracle both call it through operators/detect.page_result.
+`decision_columns`, the native rendering, is off the pipeline path and
+kept for the perfbench `functions.quality` probe; it differs on a NULL
+`lang`, where its `!=` yields NULL and emits no `lang_mismatch`."""
 
 from typing import Dict, List
 
@@ -28,7 +31,8 @@ def decide_python(rules: Dict[str, bool], lang: str, lang_pred: str,
 
 def decision_columns(rules_col: str = "rules", lang_col: str = "lang",
                      score_col: str = "score"):
-    """Native Spark rendering: (keep Column, reasons Column)."""
+    """Native Spark rendering (off the pipeline path):
+    (keep Column, reasons Column)."""
     from pyspark.sql import functions as F
 
     items = [F.when(~F.col(f"{rules_col}.{n}"), F.lit(n))

@@ -77,13 +77,12 @@ def html_to_text(col: Column) -> Column:
 
 
 def backfill_text_from_html(df):
-    """Ingestion backfill shared by QualityPipeline(from_html=True)
-    and `run_pipeline --from-html`: rows whose text IS NULL get the
+    """Ingestion backfill, run by `run_pipeline --from-html` before its
+    curation stages and the pipeline: rows whose text IS NULL get the
     native HTML->text chain over the binary ``html`` column (codegen,
     no UDF). BACKFILL ONLY — extraction collapses whitespace, and the
     Gopher line-ratio rules need the source text's line structure, so
-    non-NULL text is never rewritten. No-op when ``html`` is absent.
-    Factored here so the pipeline and the CLI can never drift."""
+    non-NULL text is never rewritten. No-op when ``html`` is absent."""
     if "html" not in df.columns:
         return df
     return df.withColumn(

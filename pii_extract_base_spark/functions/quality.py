@@ -2,9 +2,9 @@
 
 The rule DEFINITIONS live here once, with three renderings:
 
- - `rules_python(text, lang)`  — pure-Python kernel: the pipeline runs
-   it inside its one Arrow UDF (operators/detect.make_fused_udf), and
-   the oracle runs it directly
+ - `rules_python(text, lang)`  — pure-Python kernel: the pipeline's
+   one Arrow UDF and the oracle both run it through
+   operators/detect.page_result
  - `rules_columns()`           — native Spark SQL Column expressions,
    off the pipeline path (q11, perfbench); agrees with `rules_python`
    on ASCII-whitespace text (tests/test_pipeline_parity.py)

@@ -16,7 +16,9 @@ and immune to regex-pickling issues.
 import json
 from typing import Dict, Iterator, List, Optional, Tuple
 
+from ..functions.decision import decide_python
 from ..functions.quality import RULE_NAMES, rules_python
+from ..functions.scoring import score_text
 from ..kernel.model import PiiCollectionBuilder
 from ..kernel.task import DocumentChunk
 from ..kernel.processor import PiiProcessor
@@ -99,53 +101,73 @@ def detect_batch(texts, langs, urls, languages: Tuple[str, ...],
     return all_ents, scrubbed, counts
 
 
-# the whole per-row result of the pipeline's one Python crossing:
-# scores, the rule vector (RULE_NAMES order), entities and the scrub
+def page_result(proc: PiiProcessor, text: str, lang: str,
+                url: str) -> Dict:
+    """The whole per-row result of the quality pipeline: scores, the
+    rule vector (RULE_NAMES order), entities, the scrub and the
+    keep/reasons decision. `make_fused_udf` maps it over each Arrow
+    batch and `oracle.oracle_page` calls it directly, so the pipeline
+    equals the oracle by construction."""
+    lang_pred, lang_conf, logppl = score_text(text or "")
+    rules = rules_python(text, lang)
+    ents, scrubbed = process_page(proc, text, lang, url)
+    keep, reasons = decide_python(rules, lang, lang_pred, lang_conf, logppl)
+    return {
+        "lang_pred": lang_pred,
+        "lang_conf": lang_conf,
+        "logppl": logppl,
+        "rules": rules,
+        "entities": ents,
+        "n_entities": len(ents),
+        "scrubbed_text": scrubbed,
+        "keep": keep,
+        "reasons": reasons,
+    }
+
+
 RULES_STRUCT = ("struct<" + ",".join(f"{n}:boolean" for n in RULE_NAMES)
                 + ">")
 
-FUSED_RESULT_SCHEMA = (
-    "struct<lang_pred:string,lang_conf:double,logppl:double,"
-    f"rules:{RULES_STRUCT},"
-    f"entities:array<{ENTITY_STRUCT}>,"
-    "n_entities:int,scrubbed_text:string>")
+# page_result's fields, in the pipeline's output column order
+FUSED_FIELDS = (
+    ("lang_pred", "string"), ("lang_conf", "double"),
+    ("logppl", "double"), ("rules", RULES_STRUCT),
+    ("entities", f"array<{ENTITY_STRUCT}>"), ("n_entities", "int"),
+    ("scrubbed_text", "string"), ("keep", "boolean"),
+    ("reasons", "array<string>"))
+
+FUSED_RESULT_SCHEMA = ("struct<" + ",".join(f"{n}:{t}" for n, t in
+                                            FUSED_FIELDS) + ">")
 
 
 def make_fused_udf(languages: Tuple[str, ...],
                    config_json: Optional[str] = None):
-    """All of a row's Python work in ONE Arrow crossing: langid+ppl
-    (one shared n-gram pass), the quality rules, detect and scrub —
-    the same kernels `oracle.oracle_page` calls, so the pipeline
-    equals the oracle by construction.
+    """All of a row's Python work in ONE Arrow crossing: `page_result`
+    (langid+ppl in one shared n-gram pass, the quality rules, detect,
+    scrub and the keep/reasons decision) mapped over the batch.
 
     The JVM-side row<->Arrow conversion around each ArrowEvalPython
     stage costs more than the vectorized Python kernels, and the
     native renderings of the rules and scrub are array higher-order
     functions that Spark interprets outside whole-stage codegen; both
-    are cheaper here, where `text` is already in Python. Only the
-    keep/reasons decision stays native, over this struct's fields.
+    are cheaper here, where `text` is already in Python. Deciding here
+    too keeps Python's NULL semantics: a NULL `lang` is a
+    `lang_mismatch`, as in the oracle, where a native `!=` would yield
+    NULL and emit no reason.
     """
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
-
-    from ..functions.scoring import score_batch
 
     langs_t = tuple(languages)
 
     @pandas_udf(FUSED_RESULT_SCHEMA)
     def fused_udf(text: pd.Series, lang: pd.Series,
                   url: pd.Series) -> pd.DataFrame:
-        texts, lgs = text.tolist(), lang.tolist()
-        preds, confs, ppls = score_batch(texts)
-        ents, scrubbed, counts = detect_batch(
-            texts, lgs, url.tolist(), langs_t, config_json)
-        return pd.DataFrame({
-            "lang_pred": preds, "lang_conf": confs, "logppl": ppls,
-            "rules": [rules_python(t, lg) for t, lg in zip(texts, lgs)],
-            "entities": ents,
-            "n_entities": counts,
-            "scrubbed_text": scrubbed,
-        })
+        proc = get_processor(langs_t, config_json)
+        return pd.DataFrame(
+            [page_result(proc, t, lg, u) for t, lg, u in zip(
+                text.tolist(), lang.tolist(), url.tolist())],
+            columns=[n for n, _ in FUSED_FIELDS])
 
     return fused_udf
 

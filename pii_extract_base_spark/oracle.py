@@ -1,7 +1,8 @@
 """Pure-Python full-pipeline oracle.
 
-Replays the ENTIRE quality pipeline row by row using the exact same
-kernels the Spark stages wrap (scoring.score_text, quality.rules_python,
+Replays the ENTIRE quality pipeline row by row through the same row
+function the fused Spark UDF maps over each batch
+(operators.detect.page_result: scoring.score_text, quality.rules_python,
 operators.detect.process_page, decision.decide_python) — the BASELINE.md
 parity targets (byte-identical scrubbed text, keep/drop F1) are checked
 against this.
@@ -9,33 +10,15 @@ against this.
 
 from typing import Dict, Iterable, List, Optional, Tuple
 
-from .functions.scoring import score_text
-from .functions.quality import rules_python
-from .functions.decision import decide_python
-from .operators.detect import get_processor, process_page
+from .operators.detect import get_processor, page_result
 
 
 def oracle_page(text: str, lang: str, url: str,
                 languages: Tuple[str, ...],
                 config_json: Optional[str] = None) -> Dict:
     proc = get_processor(tuple(languages), config_json)
-    lang_pred, lang_conf, logppl = score_text(text or "")
-    rules = rules_python(text, lang)
-    ents, scrubbed = process_page(proc, text, lang, url)
-    keep, reasons = decide_python(rules, lang, lang_pred, lang_conf, logppl)
-    return {
-        "url": url,
-        "lang": lang,
-        "lang_pred": lang_pred,
-        "lang_conf": lang_conf,
-        "logppl": logppl,
-        "rules": rules,
-        "entities": ents,
-        "n_entities": len(ents),
-        "scrubbed_text": scrubbed,
-        "keep": keep,
-        "reasons": reasons,
-    }
+    return {"url": url, "lang": lang,
+            **page_result(proc, text, lang, url)}
 
 
 def oracle_pages(rows: Iterable[Dict], languages: Tuple[str, ...],

@@ -209,12 +209,22 @@ class CheckpointedSink:
         an ``_untyped`` bucket for NULL/unknown types (a NULL-typed
         entity must never fold into the row counts — ADVICE r2).
 
-        Cost: wave_size × (2 + n_types) conditional sums evaluated
-        per row during the write — stays in codegen, no shuffle, no
-        extra scan at any corpus size."""
+        Cost: wave_size × (3 + n_types) conditional sums evaluated
+        per row during the write — no shuffle, no extra scan at any
+        corpus size. Types are counted with native array functions
+        (size/array_remove), not `filter` lambdas, which Spark
+        interprets outside codegen."""
         kept = (F.col("keep").cast("long") if "keep" in columns
                 else F.lit(1).cast("long"))
-        known = self.entity_types
+        n_types = []
+        if "entities" in columns:
+            types = F.coalesce(F.col("entities.type"),
+                               F.array().cast("array<string>"))
+            # array_remove keeps NULL elements, so a NULL type is
+            # counted by no n_t and lands in _untyped
+            n_types = [F.size(types) - F.size(F.array_remove(types, t))
+                       for t in self.entity_types]
+            n_untyped = F.size(types) - sum(n_types, F.lit(0))
         aggs = []
         for k in wave:
             is_k = F.col("part_id") == k
@@ -223,18 +233,10 @@ class CheckpointedSink:
                          .alias(f"kept_{k}"))
             if "entities" not in columns:
                 continue
-            ents = F.col("entities")
-            for i, t in enumerate(known):
-                n_t = F.when(ents.isNull(), F.lit(0)).otherwise(
-                    F.size(F.filter(ents, lambda e: e["type"] == F.lit(t))))
+            for i, n_t in enumerate(n_types):
                 aggs.append(F.sum(F.when(is_k, n_t).otherwise(F.lit(0)))
                              .alias(f"ent_{k}_{i}"))
-            n_unknown = F.when(ents.isNull(), F.lit(0)).otherwise(
-                F.size(F.filter(
-                    ents,
-                    lambda e: ~F.coalesce(e["type"].isin(known),
-                                          F.lit(False)))))
-            aggs.append(F.sum(F.when(is_k, n_unknown).otherwise(F.lit(0)))
+            aggs.append(F.sum(F.when(is_k, n_untyped).otherwise(F.lit(0)))
                          .alias(f"ent_{k}_x"))
         return aggs
 

@@ -1,8 +1,8 @@
 """Structured Streaming variant of the quality pipeline.
 
 The north rule is a batch job (SURVEY.md §2.4: checkpoint/resume covers
-recovery), but QualityPipeline's plan — one pandas UDF plus native
-decision expressions — is execution-mode agnostic, so the stream
+recovery), but QualityPipeline's plan — one pandas UDF and a
+projection — is execution-mode agnostic, so the stream
 applies the very same plan. This module wires:
 
   file-source stream of pages parquet

@@ -380,7 +380,7 @@ def main():
           "`HashAggregate` (long minima, no sort)\n")
 
     # pipeline: its one ArrowEvalPython stage, its inputs, and no
-    # native rules/scrub higher-order functions beside it
+    # native rules/scrub higher-order functions or decision beside it
     from pii_extract_base_spark.pipeline import QualityPipeline
     from pii_extract_base_spark.sources.pages import synth_pages
     out = QualityPipeline()(synth_pages(spark, SF_DIR))
@@ -390,13 +390,15 @@ def main():
     plan = buf.getvalue()
     from pii_extract_base_spark.plans import arrow_eval_inputs
     n_arrow = len(arrow_eval_inputs(plan))
-    hofs = [h for h in ("array_intersect", "aggregate(") if h in plan]
+    hofs = [h for h in ("array_intersect", "aggregate(", "lang_mismatch")
+            if h in plan]
     print("## quality pipeline\n")
     print(f"{'✓' if n_arrow == 1 else '✗'} ArrowEvalPython stages: "
-          f"{n_arrow} (design: exactly 1 — langid+ppl, rules, detect "
-          "and scrub in one Arrow crossing; keep/reasons native)\n")
-    print(f"{'✓' if not hofs else '✗ PRESENT'} no native rules or scrub "
-          "higher-order functions (`!array_intersect`, `!aggregate(`)"
+          f"{n_arrow} (design: exactly 1 — langid+ppl, rules, detect, "
+          "scrub and keep/reasons in one Arrow crossing)\n")
+    print(f"{'✓' if not hofs else '✗ PRESENT'} no native rules, scrub "
+          "or decision (`!array_intersect`, `!aggregate(`, "
+          "`!lang_mismatch`)"
           f"{': ' + ', '.join(hofs) if hofs else ''}\n")
     print("```\n" + plan.split("\n\n")[0].strip()[:5000] + "\n```\n")
     ok_all &= (n_arrow == 1) and not hofs

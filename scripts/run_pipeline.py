@@ -142,12 +142,10 @@ def main() -> int:
 
     # --from-html backfill must run BEFORE the curation stages: the
     # text-rewriting stages (--dedup-spans/--dedup-lines) coalesce
-    # NULL text to '', which would defeat QualityPipeline's
-    # NULL-only backfill predicate and process html-only pages with
-    # empty text (or, pre-fix, drop them outright). Same shared
-    # helper the pipeline applies, so single-stage results are
-    # unchanged — curation stages simply see the recovered text too,
-    # which is what dedup/ppl selection should operate on.
+    # NULL text to '', which would defeat the NULL-only backfill
+    # predicate and process html-only pages with empty text. The
+    # curation stages see the recovered text too, which is what
+    # dedup/ppl selection should operate on.
     if args.from_html:
         from pii_extract_base_spark.functions.htmlextract import (
             backfill_text_from_html)
@@ -349,8 +347,7 @@ def main() -> int:
         pages = (sp.where(F.col("split") == args.split_keep)
                    .drop("split", "_host"))
 
-    pipe = QualityPipeline(tuple(args.languages.split(",")),
-                           from_html=args.from_html)
+    pipe = QualityPipeline(tuple(args.languages.split(",")))
 
     def _pack_stats(scored, writer_dir=None):
         """Pack the kept pages' scrubbed text into SEQ_LEN-token
@@ -380,6 +377,10 @@ def main() -> int:
         langs = tuple(args.languages.split(","))
         sink = CheckpointedSink(args.checkpoint,
                                 n_partitions=args.partitions)
+        if _staged[0]:
+            # the sink filters `pages` once per wave: cut the last
+            # curation stage too, or every wave recomputes the chain
+            pages = _stage(pages)
         committed = sink.run(
             pages, lambda df: pipe(df).drop("rules"),
             input_fingerprint=registry_fingerprint(langs),
@@ -398,12 +399,13 @@ def main() -> int:
         return 0
 
     out = pipe(pages)
+    if args.output or args.pack:
+        # two consumers, one pipeline run: cut lineage (lazily, like
+        # _pack_stats) so the second reads the rows the first
+        # materialized instead of re-running the UDF
+        out = out.localCheckpoint(eager=False)
 
     if args.output:
-        # two tables, one pipeline run: cut lineage (lazily, like
-        # _pack_stats) so the entities write reads the rows the first
-        # write materialized instead of re-running the UDF
-        out = out.localCheckpoint(eager=False)
         (out.drop("rules", "entities")
             .write.mode("overwrite").parquet(f"{args.output}/pages_scored"))
         pipe_entities = out.selectExpr("url", "explode(entities) as e") \

@@ -70,6 +70,8 @@ def test_pipeline_single_arrow_crossing(spark):
     # rules' stopword intersection nor the scrub fold is in the plan
     assert count_nodes(plan, "array_intersect") == 0, plan[:800]
     assert count_nodes(plan, r"aggregate\(") == 0, plan[:800]
+    # keep/reasons are decided inside it too: no native decision
+    assert count_nodes(plan, "lang_mismatch") == 0, plan[:800]
 
 
 def test_textstats_native_no_python(spark):

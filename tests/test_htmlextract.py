@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pii_extract_base_spark.functions.htmlextract import (
-    extract_pages, html_to_text, html_to_text_sql)
+    backfill_text_from_html, extract_pages, html_to_text, html_to_text_sql)
 from pii_extract_base_spark.sources.pages import synth_pages
 
 from .conftest import SF_DIR
@@ -78,13 +78,13 @@ def test_sql_rendering_parity(spark):
 
 
 def test_pipeline_from_html_backfill(spark):
-    """QualityPipeline(from_html=True): rows with NULL text get the
-    extracted html text; rows with text keep it untouched."""
+    """backfill_text_from_html, then the pipeline: rows with NULL text
+    get the extracted html text; rows with text keep it untouched."""
     from pii_extract_base_spark.pipeline import QualityPipeline
     pages = synth_pages(spark, SF_DIR).limit(20)
     nulled = pages.withColumn(
         "text", F.when(F.crc32("url") % 2 == 0, F.col("text")))
-    out = QualityPipeline(("en",), from_html=True)(nulled)
+    out = QualityPipeline(("en",))(backfill_text_from_html(nulled))
     rows = out.select("url", "text").collect()
     src = {r["url"]: r["text"] for r in pages.collect()}
     n_backfilled = 0

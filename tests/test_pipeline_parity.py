@@ -1,9 +1,9 @@
 """Engine-vs-oracle parity on the synthetic pages corpus (BASELINE.md):
 byte-identical scrubbed text per url, identical entity dicts, identical
-keep/drop (F1 must be 1.0 — shared kernel), rule vector equality between
-the native-Spark SQL rendering (off the pipeline path) and the
+keep/drop (F1 must be 1.0 — shared row function), rule vector equality
+between the native-Spark SQL rendering (off the pipeline path) and the
 pure-Python one, and pipeline-vs-oracle parity on whitespace the two
-renderings treat differently.
+renderings treat differently and on NULL languages.
 """
 
 import math
@@ -116,6 +116,36 @@ def test_whitespace_pages_match_oracle(whitespace_results, case):
     assert row.keep == exp["keep"]
     assert list(row.reasons) == exp["reasons"]
     assert row.scrubbed_text == exp["scrubbed_text"]
+
+
+@pytest.fixture(scope="module")
+def null_lang_pages(spark):
+    recs = [page_record(doc_id) for doc_id in range(40)]
+    return spark.createDataFrame(
+        [(r["url"], r["warc_ts"], r["text"], None) for r in recs],
+        "url string, warc_ts timestamp, text string, lang string")
+
+
+def test_null_lang_pages_match_oracle(null_lang_pages):
+    """A NULL `lang` decides as the oracle does (`lang_mismatch`): the
+    decision must not follow SQL's NULL `!=`, which emits no reason."""
+    rows = QualityPipeline(("en",))(null_lang_pages).collect()
+    assert len(rows) == 40
+    for row in rows:
+        exp = oracle_page(row.text, None, row.url, ("en",))
+        assert row.keep == exp["keep"], row.url
+        assert list(row.reasons) == exp["reasons"], row.url
+        assert row.n_entities == exp["n_entities"], row.url
+        assert row.scrubbed_text == exp["scrubbed_text"], row.url
+
+
+def test_null_lang_multilingual_fails_loudly(null_lang_pages):
+    """With several languages and no row language, detect cannot pick
+    its tasks: collecting `keep` raises instead of keeping the row.
+    (`count()` would prune the UDF and raise nothing.)"""
+    out = QualityPipeline(DEFAULT_LANGUAGES)(null_lang_pages.limit(1))
+    with pytest.raises(Exception, match="must select a language for tasks"):
+        out.select("keep").collect()
 
 
 def test_scores_match(results):

@@ -49,25 +49,51 @@ def _drive(monkeypatch, argv):
     return json.loads(line)
 
 
-def _python_executions(spark):
-    """{execution id: plan runs an Arrow UDF?} for every SQL execution
-    the session's status store holds."""
+def _executions(spark, needle="ArrowEvalPython"):
+    """{execution id: physical plan contains `needle`?} for every SQL
+    execution the session's status store holds."""
     lst = spark._jsparkSession.sharedState().statusStore().executionsList()
-    return {e.executionId(): "ArrowEvalPython" in e.physicalPlanDescription()
+    return {e.executionId(): needle in e.physicalPlanDescription()
             for e in (lst.apply(i) for i in range(lst.size()))}
+
+
+def _runs_of(spark, monkeypatch, argv, needle="ArrowEvalPython"):
+    """(summary, new SQL executions whose plan contains `needle`)."""
+    before = set(_executions(spark, needle))
+    summary = _drive(monkeypatch, argv)
+    return summary, [i for i, hit in _executions(spark, needle).items()
+                     if hit and i not in before]
 
 
 def test_output_runs_pipeline_once(spark, monkeypatch, tmp_path):
     """--output writes pages_scored and entities from ONE run of the
     pipeline's Arrow UDF, not one per table."""
-    before = set(_python_executions(spark))
-    out_dir = str(tmp_path / "out")
-    summary = _drive(monkeypatch, [
+    summary, runs = _runs_of(spark, monkeypatch, [
         "run_pipeline", "--sf-dir", SF_DIR, "--limit", "120",
-        "--output", out_dir])
+        "--output", str(tmp_path / "out")])
     assert summary["docs"] == 120 and summary["entities"] > 0
-    runs = [i for i, py in _python_executions(spark).items()
-            if py and i not in before]
+    assert len(runs) <= 1, runs
+
+
+def test_pack_runs_pipeline_once(spark, monkeypatch):
+    """--pack without --output: the summary aggregate and the packer
+    read ONE run of the pipeline's Arrow UDF."""
+    summary, runs = _runs_of(spark, monkeypatch, [
+        "run_pipeline", "--sf-dir", SF_DIR, "--limit", "120",
+        "--pack", "64"])
+    assert summary["docs"] == 120 and summary["examples"] >= 1
+    assert len(runs) <= 1, runs
+
+
+def test_checkpoint_runs_curation_once(spark, monkeypatch, tmp_path):
+    """--checkpoint after a curation stage: the sink's waves read ONE
+    run of the stage (dedup's md5 fingerprint), not one per wave."""
+    summary, runs = _runs_of(spark, monkeypatch, [
+        "run_pipeline", "--sf-dir", SF_DIR, "--limit", "300", "--dedup",
+        "--checkpoint", str(tmp_path / "tbl"), "--partitions", "4",
+        "--wave-size", "1"], needle="conv(substring(md5")
+    assert summary["partitions_committed_this_run"] == 4
+    assert 0 < summary["docs"] <= 300
     assert len(runs) <= 1, runs
 
 
