@@ -1980,15 +1980,14 @@ def _chunked_docs(spark, sf_dir):
 
 
 def q77_chunked_detect(spark, sf_dir):
-    """Distributed chunk-tree PII detection (operators/detect.
-    detect_chunked — closes SURVEY §2.3 D1 on the DataFrame plane):
-    posexplode the chunked synth-pages corpus, attach lag/lead
-    neighbor context, run the kernel detect UDF per chunk WITH that
-    context (reference api/processor.py:284 iter_full(context=True)),
-    reassemble per-document collections with doc-level first-use
-    detector numbering (D12). Pages are chunked by sentence line, so
-    the context-validated phone task must see the previous line's
-    keyword. Kernel regexes aren't DuckDB-replayable → rows-only here;
+    """Chunk-tree PII detection (operators/detect.detect_chunked —
+    closes SURVEY §2.3 D1 on the DataFrame plane): one Arrow crossing
+    per chunked synth page runs the kernel's chunk loop, detecting
+    each chunk WITH its neighbours' text as context (reference
+    api/processor.py:284 iter_full(context=True)) into one per-document
+    collection with doc-level first-use detector numbering (D12).
+    Pages are chunked by sentence line, so the context-validated phone
+    task must see the previous line's keyword. Kernel regexes aren't DuckDB-replayable → rows-only here;
     byte parity with the local chunk-tree API is pinned by
     tests/test_detect_chunked.py."""
     from pii_extract_base_spark.operators.detect import detect_chunked

@@ -2,9 +2,9 @@
 
 Settings chosen for the 100 TB design point (SURVEY.md §4):
  - AQE on (runtime re-plan, skew-join splitting, partition coalescing)
- - Arrow on for pandas UDFs, with a bounded records-per-batch so long
-   web pages can't blow executor memory (batch size is additionally
-   bytes-capped inside the detect stage)
+ - Arrow on for pandas UDFs, with batches bounded in records AND in
+   bytes, so neither many pages nor a few whole-document rows (the
+   chunked detect path) can blow a Python worker's memory
  - shuffle partition count is a knob; at cluster scale set it to
    ~2-3× total cores via spark-submit conf.
 """
@@ -14,6 +14,10 @@ import os
 from pyspark.sql import SparkSession
 
 ARROW_MAX_RECORDS_PER_BATCH = 2048  # web pages ~KBs; caps Arrow batch memory
+# Spark splits a pandas UDF's input batch once it reaches this many
+# bytes (64 MB is Spark 4.1's default, pinned here so the bound is
+# explicit); a batch still holds at least one row
+ARROW_MAX_BYTES_PER_BATCH = 64 << 20
 
 # One BLAS/OMP thread per Python worker. Spark already uses every core
 # (one worker per task slot); letting each worker's OpenBLAS spawn
@@ -55,6 +59,8 @@ def get_spark(app_name: str = "pii-extract-base-spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 str(ARROW_MAX_RECORDS_PER_BATCH))
+        .config("spark.sql.execution.arrow.maxBytesPerBatch",
+                str(ARROW_MAX_BYTES_PER_BATCH))
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

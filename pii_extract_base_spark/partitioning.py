@@ -20,11 +20,15 @@ def salted_key(col: str, buckets: int):
     return F.pmod(F.xxhash64(F.col(col)), F.lit(buckets))
 
 
-def salted_repartition(df: DataFrame, col: str, num_partitions: int,
-                       salt_factor: int = 4) -> DataFrame:
+# hash buckets per output partition in salted_repartition
+SALT_FACTOR = 4
+
+
+def salted_repartition(df: DataFrame, col: str,
+                       num_partitions: int) -> DataFrame:
     """Spread by hashed key with a salt factor so a single hot key value
     cannot own a whole partition."""
-    buckets = num_partitions * salt_factor
+    buckets = num_partitions * SALT_FACTOR
     return (df.withColumn("_salt", salted_key(col, buckets))
               .repartition(num_partitions, "_salt")
               .drop("_salt"))

@@ -32,34 +32,32 @@ import os
 import shutil
 import time
 from pathlib import Path
-from typing import Callable, Dict, Iterable, List, Optional, Set
+from typing import Callable, Dict, List, Optional, Set
 
 from pyspark.sql import DataFrame, Observation, functions as F
 
+from ..kernel.model import PiiEnum
+
 MANIFEST = "_manifest.jsonl"
+# the manifest's ``stage`` of every commit
+STAGE = "quality_pipeline"
+# rows are assigned to partitions by pmod(xxhash64(KEY_COL), P)
+KEY_COL = "url"
+# the closed set of entity-type values the transform can emit, used to
+# build the per-type observe() aggregates (metrics are computed DURING
+# the write job, so the type set must be known at plan time); entities
+# whose type is NULL or outside the set are counted under ``_untyped``
+# instead of silently skewing row counts (ADVICE r2)
+ENTITY_TYPES = tuple(t.value for t in PiiEnum)
 METRICS_SCHEMA = ("partition_id int, input_fingerprint string, rows_in long, "
                   "rows_kept long, entities map<string,long>, wall_ms long, "
                   "stage string, committed_at timestamp")
 
 
 class CheckpointedSink:
-    def __init__(self, table_path: str, n_partitions: int = 8,
-                 stage: str = "quality_pipeline",
-                 entity_types: Optional[Iterable[str]] = None):
-        """``entity_types``: the closed set of entity-type values the
-        transform can emit, used to build the per-type observe()
-        aggregates (metrics are computed DURING the write job, so the
-        type set must be known at plan time). Defaults to the engine's
-        PiiEnum registry; entities whose type is NULL or outside the
-        set are counted under ``_untyped`` instead of silently skewing
-        row counts (ADVICE r2)."""
+    def __init__(self, table_path: str, n_partitions: int = 8):
         self.path = Path(table_path)
         self.n_partitions = n_partitions
-        self.stage = stage
-        if entity_types is None:
-            from ..kernel.model import PiiEnum
-            entity_types = [t.value for t in PiiEnum]
-        self.entity_types = list(entity_types)
         self.path.mkdir(parents=True, exist_ok=True)
 
     # -- manifest ------------------------------------------------------------
@@ -111,13 +109,12 @@ class CheckpointedSink:
 
     def run(self, pages: DataFrame,
             transform: Callable[[DataFrame], DataFrame],
-            key_col: str = "url",
             input_fingerprint: str = "",
             fail_after: Optional[int] = None,
             wave_size: int = 1) -> int:
         """Process + commit every uncommitted partition.
 
-        :param transform: pages-DF → output-DF (must keep key_col and
+        :param transform: pages-DF → output-DF (must keep KEY_COL and
             expose keep/entities columns for metrics)
         :param fail_after: simulate a crash after N partition commits
             (for resume tests)
@@ -130,7 +127,7 @@ class CheckpointedSink:
             `_part_id IN (...)` filter prunes instead of rescanning.
         :return: number of partitions committed in THIS run
         """
-        part = F.pmod(F.xxhash64(F.col(key_col)),
+        part = F.pmod(F.xxhash64(F.col(KEY_COL)),
                       F.lit(self.n_partitions)).cast("int")
         pages = pages.withColumn("_part_id", part)
         done = self.committed_partitions()
@@ -147,7 +144,7 @@ class CheckpointedSink:
             # observe() aggregates piggyback on that same job, so the
             # per-partition metrics cost ZERO extra scans (round 1
             # re-read the output 3x, round 2 1x)
-            out_part = F.pmod(F.xxhash64(F.col(key_col)),
+            out_part = F.pmod(F.xxhash64(F.col(KEY_COL)),
                               F.lit(self.n_partitions)).cast("int")
             staged = out.withColumn("part_id", out_part)
             obs = Observation()
@@ -190,7 +187,7 @@ class CheckpointedSink:
                     "rows_kept": m["rows_kept"],
                     "entities": m["entities"],
                     "wall_ms": wall_ms // len(wave),
-                    "stage": self.stage,
+                    "stage": STAGE,
                     "committed_at": time.strftime("%Y-%m-%dT%H:%M:%S"),
                 })
                 committed += 1
@@ -223,7 +220,7 @@ class CheckpointedSink:
             # array_remove keeps NULL elements, so a NULL type is
             # counted by no n_t and lands in _untyped
             n_types = [F.size(types) - F.size(F.array_remove(types, t))
-                       for t in self.entity_types]
+                       for t in ENTITY_TYPES]
             n_untyped = F.size(types) - sum(n_types, F.lit(0))
         aggs = []
         for k in wave:
@@ -246,7 +243,7 @@ class CheckpointedSink:
         for k in wave:
             ents: Dict[str, int] = {}
             if "entities" in columns:
-                for i, t in enumerate(self.entity_types):
+                for i, t in enumerate(ENTITY_TYPES):
                     n = int(vals.get(f"ent_{k}_{i}") or 0)
                     if n:
                         ents[t] = n

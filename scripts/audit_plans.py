@@ -216,15 +216,11 @@ AUDIT = {
     # rank (WindowGroupLimit pushes the rank-1..n decision map-side),
     # set aggregate + native rebuild — never a self-join
     "q79_sliding_span_dedup": ["Generate", "Window", "HashAggregate"],
-    # r4 D1 kernel path: chunk explode + neighbor-context window + ONE
-    # Arrow crossing (the chunk UDF). r5: the detect stage is
-    # localCheckpoint-materialized (it feeds two consumer subtrees and
-    # used to be re-planned — and re-RUN — under each), so the static
-    # plan shows the checkpoint scan; what remains is the entity
-    # explode + detector-numbering window + reassembly aggs, and the
-    # Arrow crossing must NOT reappear (that would mean the barrier
-    # was dropped and the UDF re-runs per consumer again)
-    "q77_chunked_detect": ["Generate", "Window", "HashAggregate"],
+    # D1 kernel path: each row holds its whole document, so ONE Arrow
+    # crossing runs the kernel's chunk loop (neighbour context, doc-
+    # level detector numbering, scrub) per document; only q77's
+    # per-language report aggregates — no window, no chunk shuffle
+    "q77_chunked_detect": ["ArrowEvalPython", "HashAggregate"],
     # q71/q72/q92 (BPE train/encode/eval), q73/q74 (PQ codebooks/ADC) are
     # driver-loop iteratives like q53/q66/q67: the trained state
     # (merges / codebooks / ADC tables) is inlined as plan literals,
@@ -285,7 +281,7 @@ FORBID = {
                          "SortAggregate"],
     "q78_chunk_context_scan": ["ArrowEvalPython", "BatchEvalPython",
                                "CartesianProduct"],
-    "q77_chunked_detect": ["ArrowEvalPython", "BatchEvalPython",
+    "q77_chunked_detect": ["Window", "BatchEvalPython",
                            "CartesianProduct"],
     "q80_ivfpq_topk": ["CartesianProduct", "ArrowEvalPython",
                        "BatchEvalPython", "SortAggregate"],

@@ -370,6 +370,16 @@ def main() -> int:
             "coalesce(sum(n_tokens), 0L) as t").collect()[0]
         return {"examples": agg.n, "example_tokens": agg.t}
 
+    def _summary(scored):
+        """(docs, kept, entities) of a pipeline output table in ONE
+        aggregate: the entity count is sum(n_entities), so no entities
+        table is re-read."""
+        agg = scored.selectExpr(
+            "count(*) as n",
+            "coalesce(sum(cast(keep as int)), 0) as k",
+            "coalesce(sum(n_entities), 0L) as e").collect()[0]
+        return agg.n, agg.k, agg.e
+
     if args.checkpoint:
         from pii_extract_base_spark.sinks.checkpoint import CheckpointedSink
         from pii_extract_base_spark.registry.factory import (
@@ -386,11 +396,13 @@ def main() -> int:
             input_fingerprint=registry_fingerprint(langs),
             wave_size=args.wave_size)
         table = sink.read(spark)
+        n_total, n_kept, n_ents = _summary(table)
         extra = _pack_stats(table) if args.pack else {}
         dt = time.time() - t0
         print(json.dumps({
-            "docs": table.count(),
-            "kept": table.where("keep").count(),
+            "docs": n_total,
+            "kept": n_kept,
+            "entities": n_ents,
             "partitions_committed_this_run": committed,
             "partitions_total": len(sink.committed_partitions()),
             **extra,
@@ -412,18 +424,11 @@ def main() -> int:
             .select("url", "e.*")
         pipe_entities.write.mode("overwrite") \
             .parquet(f"{args.output}/entities")
-        written = spark.read.parquet(f"{args.output}/pages_scored")
-        n_total = written.count()
-        n_kept = written.where("keep").count()
-        n_ents = spark.read.parquet(f"{args.output}/entities").count()
-        scored_src = written  # pack from the committed parquet
+        # summarize and pack from the committed parquet
+        scored_src = spark.read.parquet(f"{args.output}/pages_scored")
     else:
-        agg = out.selectExpr(
-            "count(*) as n_total",
-            "sum(cast(keep as int)) as n_kept",
-            "sum(n_entities) as n_ents").collect()[0]
-        n_total, n_kept, n_ents = agg.n_total, agg.n_kept, agg.n_ents
         scored_src = out
+    n_total, n_kept, n_ents = _summary(scored_src)
 
     extra = (_pack_stats(scored_src, writer_dir=args.output)
              if args.pack else {})

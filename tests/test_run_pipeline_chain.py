@@ -75,6 +75,36 @@ def test_output_runs_pipeline_once(spark, monkeypatch, tmp_path):
     assert len(runs) <= 1, runs
 
 
+def test_output_summary_scans_no_entities_table(spark, monkeypatch,
+                                                tmp_path):
+    """--output summarizes pages_scored in ONE aggregate: its entity
+    count is sum(n_entities), so no execution after the writes scans
+    <out>/entities, and the count equals that table's rows."""
+    out = tmp_path / "out"
+    summary, scans = _runs_of(spark, monkeypatch, [
+        "run_pipeline", "--sf-dir", SF_DIR, "--limit", "120",
+        "--output", str(out)],
+        needle=f"InMemoryFileIndex [file:{out}/entities]")
+    assert scans == []
+    assert summary["entities"] == spark.read.parquet(
+        f"{out}/entities").count() > 0
+
+
+def test_checkpoint_summary_counts_entities(spark, monkeypatch, tmp_path):
+    """--checkpoint reports entities like --output: the committed
+    table's sum(n_entities)."""
+    from pii_extract_base_spark.sinks.checkpoint import CheckpointedSink
+    tbl = str(tmp_path / "tbl")
+    summary = _drive(monkeypatch, [
+        "run_pipeline", "--sf-dir", SF_DIR, "--limit", "120",
+        "--checkpoint", tbl, "--partitions", "2", "--wave-size", "2"])
+    agg = (CheckpointedSink(tbl, n_partitions=2).read(spark)
+           .selectExpr("count(*) as n", "sum(n_entities) as e")
+           .collect()[0])
+    assert summary["docs"] == agg.n == 120
+    assert summary["entities"] == agg.e > 0
+
+
 def test_pack_runs_pipeline_once(spark, monkeypatch):
     """--pack without --output: the summary aggregate and the packer
     read ONE run of the pipeline's Arrow UDF."""
