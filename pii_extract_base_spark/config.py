@@ -5,8 +5,8 @@ Settings chosen for the 100 TB design point (SURVEY.md §4):
  - Arrow on for pandas UDFs, with batches bounded in records AND in
    bytes, so neither many pages nor a few whole-document rows (the
    chunked detect path) can blow a Python worker's memory
- - shuffle partition count is a knob; at cluster scale set it to
-   ~2-3× total cores via spark-submit conf.
+ - the master and parallelism come from the launcher unless a core
+   count is given; shuffle partitions follow the parallelism.
 """
 
 import os
@@ -45,14 +45,11 @@ def get_spark(app_name: str = "pii-extract-base-spark",
               cores: int = None,
               shuffle_partitions: int = None,
               extra_conf: dict = None) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_partitions = shuffle_partitions or max(2 * cores, 32)
-
+    """Runs on local[cores or SPARK_GRAFT_CPUS] if either is set, else on
+    the launcher's master (spark-submit --master, or local[*])."""
     builder = (
         SparkSession.builder
-        .master(f"local[{cores}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -89,6 +86,13 @@ def get_spark(app_name: str = "pii-extract-base-spark",
                 + os.environ.get("SPARK_WAREHOUSE_DIR",
                                  "/tmp/pii_spark_warehouse"))
     )
+    cores = cores or os.environ.get("SPARK_GRAFT_CPUS")
+    if cores:
+        builder = builder.master(f"local[{cores}]")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    parallelism = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   str(shuffle_partitions or max(2 * parallelism, 32)))
+    return spark

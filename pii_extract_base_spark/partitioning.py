@@ -3,13 +3,14 @@
 At 100 TB the hazard is long-document skew: a few 1 MB pages in a
 partition of 1 KB pages stall its executor. Policy:
 
- - repartition on a SALTED key: xxhash64(url) pmod S — uniform,
-   deterministic, decouples layout from any hot url prefix
+ - repartition by Spark's hash of the url: N near-equal partitions,
+   so input read as one partition still runs as N tasks (a hot key
+   stays in one partition; salted_join splits it for joins)
  - AQE handles residual skew at shuffle boundaries
    (spark.sql.adaptive.skewJoin / coalescePartitions, on in config.py)
- - Arrow batches are row-capped in config.py; the detect/score UDFs do
-   constant per-row work beyond text length, so byte skew within a
-   batch degrades gracefully.
+ - Arrow batches are capped in rows and bytes in config.py; the fused
+   UDF does constant per-row work beyond text length, so byte skew
+   within a batch degrades gracefully.
 """
 
 from pyspark.sql import DataFrame, functions as F
@@ -20,18 +21,10 @@ def salted_key(col: str, buckets: int):
     return F.pmod(F.xxhash64(F.col(col)), F.lit(buckets))
 
 
-# hash buckets per output partition in salted_repartition
-SALT_FACTOR = 4
-
-
 def salted_repartition(df: DataFrame, col: str,
                        num_partitions: int) -> DataFrame:
-    """Spread by hashed key with a salt factor so a single hot key value
-    cannot own a whole partition."""
-    buckets = num_partitions * SALT_FACTOR
-    return (df.withColumn("_salt", salted_key(col, buckets))
-              .repartition(num_partitions, "_salt")
-              .drop("_salt"))
+    """Spark's hash repartition of ``df`` by ``col``."""
+    return df.repartition(num_partitions, col)
 
 
 def salted_join(big: DataFrame, small: DataFrame, key: str,

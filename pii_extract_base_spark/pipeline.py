@@ -5,7 +5,7 @@ detect + scrub → keep/drop, as one declarative DataFrame plan.
 Physical shape (SURVEY.md §3.4):
 
   scan (parquet/Iceberg; prune lang partitions when present)
-    → [optional] repartition(N, salted url hash)    # skew mitigation (N9)
+    → [optional] repartition(N, url)   # spread over N tasks (N9)
     → one struct [Arrow UDF: langid+ppl, rules, detect, scrub,
                   keep + reasons; ships only text/lang/url]
     → select the struct's fields as columns
@@ -55,9 +55,10 @@ class QualityPipeline:
 
     def entities(self, pages: DataFrame) -> DataFrame:
         """Exploded PiiCollection replay (FIXTURES.md §3.1)."""
-        out = self(pages)
-        e = F.explode("entities").alias("e")
-        return (out.select("url", e)
-                .select("url", "e.type", "e.subtype", "e.value", "e.start",
-                        "e.end", "e.lang", "e.country", "e.detector",
-                        "e.method", "e.stage"))
+        return explode_entities(self(pages))
+
+
+def explode_entities(out: DataFrame) -> DataFrame:
+    """A pipeline output's entities, one row each: url, e.*."""
+    return (out.select("url", F.explode("entities").alias("e"))
+               .select("url", "e.*"))

@@ -110,14 +110,11 @@ class CheckpointedSink:
     def run(self, pages: DataFrame,
             transform: Callable[[DataFrame], DataFrame],
             input_fingerprint: str = "",
-            fail_after: Optional[int] = None,
             wave_size: int = 1) -> int:
         """Process + commit every uncommitted partition.
 
         :param transform: pages-DF → output-DF (must keep KEY_COL and
             expose keep/entities columns for metrics)
-        :param fail_after: simulate a crash after N partition commits
-            (for resume tests)
         :param wave_size: partitions processed per Spark job. 1 = one
             input scan per partition (smallest commit granularity);
             W > 1 amortizes the scan across W partitions — at corpus
@@ -191,9 +188,6 @@ class CheckpointedSink:
                     "committed_at": time.strftime("%Y-%m-%dT%H:%M:%S"),
                 })
                 committed += 1
-                if fail_after is not None and committed >= fail_after:
-                    raise RuntimeError(
-                        f"simulated failure after {committed} partitions")
         wave_tmp = self.path / "_wave_tmp"
         if wave_tmp.exists():
             shutil.rmtree(wave_tmp)

@@ -375,29 +375,32 @@ def main():
     print(f"{'✓' if hash_ok else '✗ MISSING'} map-side-combinable "
           "`HashAggregate` (long minima, no sort)\n")
 
-    # pipeline: its one ArrowEvalPython stage, its inputs, and no
-    # native rules/scrub higher-order functions or decision beside it
+    # pipeline as scripts/run_pipeline.py builds it: one url-hash
+    # Exchange, one ArrowEvalPython stage, its inputs, and no salt
+    # projection or native rules/scrub/decision beside it
     from pii_extract_base_spark.pipeline import QualityPipeline
+    from pii_extract_base_spark.plans import arrow_eval_inputs, formatted_plan
     from pii_extract_base_spark.sources.pages import synth_pages
-    out = QualityPipeline()(synth_pages(spark, SF_DIR))
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
-    from pii_extract_base_spark.plans import arrow_eval_inputs
+    plan = formatted_plan(QualityPipeline(
+        salt_partitions=2 * spark.sparkContext.defaultParallelism)(
+        synth_pages(spark, SF_DIR)))
     n_arrow = len(arrow_eval_inputs(plan))
-    hofs = [h for h in ("array_intersect", "aggregate(", "lang_mismatch")
-            if h in plan]
+    n_exchange = len(re.findall(r"\(\d+\) Exchange\n", plan))
+    spread = n_exchange == 1 and "Arguments: hashpartitioning(url#" in plan
+    hofs = [h for h in ("array_intersect", "aggregate(", "lang_mismatch",
+                        "pmod(xxhash64") if h in plan]
     print("## quality pipeline\n")
     print(f"{'✓' if n_arrow == 1 else '✗'} ArrowEvalPython stages: "
           f"{n_arrow} (design: exactly 1 — langid+ppl, rules, detect, "
           "scrub and keep/reasons in one Arrow crossing)\n")
+    print(f"{'✓' if spread else '✗'} Exchanges: {n_exchange} (design: "
+          "exactly 1, `hashpartitioning(url, N)`)\n")
     print(f"{'✓' if not hofs else '✗ PRESENT'} no native rules, scrub "
-          "or decision (`!array_intersect`, `!aggregate(`, "
-          "`!lang_mismatch`)"
+          "or decision, no salt (`!array_intersect`, `!aggregate(`, "
+          "`!lang_mismatch`, `!pmod(xxhash64`)"
           f"{': ' + ', '.join(hofs) if hofs else ''}\n")
     print("```\n" + plan.split("\n\n")[0].strip()[:5000] + "\n```\n")
-    ok_all &= (n_arrow == 1) and not hofs
+    ok_all &= (n_arrow == 1) and spread and not hofs
 
     # r5 guard (r4 judge finding): the PQ family's generated assign
     # method used to exceed the JVM's 64 KB limit and silently fall

@@ -3,10 +3,11 @@
 
 Usage (north-rule contract: spark-submit --py-files):
 
-    cd /root/repo && python -m zipfile -c /tmp/pii_spark.zip pii_extract_base_spark
-    spark-submit --master 'local[32]' --py-files /tmp/pii_spark.zip \
-        scripts/run_pipeline.py --sf-dir /root/testdata/sf0.001 \
-        --output /tmp/pipeline_out
+    python -m zipfile -c pii_spark.zip pii_extract_base_spark
+    spark-submit --master 'local[8]' --py-files pii_spark.zip \
+        scripts/run_pipeline.py --sf-dir testdata/sf0.001 \
+        --output pipeline_out
+    (--master is used unless --cores or SPARK_GRAFT_CPUS is set)
 
 Reads documents.parquet under --sf-dir, synthesizes the pages corpus,
 runs langid→ppl→rules→detect→scrub→keep, writes kept/scrubbed pages and
@@ -131,7 +132,8 @@ def main() -> int:
         ap.error("--mix and --mix-budget must be given together")
 
     from pii_extract_base_spark.config import get_spark
-    from pii_extract_base_spark.pipeline import QualityPipeline
+    from pii_extract_base_spark.pipeline import (
+        QualityPipeline, explode_entities)
     from pii_extract_base_spark.sources.pages import synth_pages
 
     spark = get_spark(app_name="quality-pipeline", cores=args.cores)
@@ -347,7 +349,10 @@ def main() -> int:
         pages = (sp.where(F.col("split") == args.split_keep)
                    .drop("split", "_host"))
 
-    pipe = QualityPipeline(tuple(args.languages.split(",")))
+    # 2 tasks per core: a synthesized corpus is read as one partition
+    langs = tuple(args.languages.split(","))
+    pipe = QualityPipeline(
+        langs, salt_partitions=2 * spark.sparkContext.defaultParallelism)
 
     def _pack_stats(scored, writer_dir=None):
         """Pack the kept pages' scrubbed text into SEQ_LEN-token
@@ -384,7 +389,6 @@ def main() -> int:
         from pii_extract_base_spark.sinks.checkpoint import CheckpointedSink
         from pii_extract_base_spark.registry.factory import (
             registry_fingerprint)
-        langs = tuple(args.languages.split(","))
         sink = CheckpointedSink(args.checkpoint,
                                 n_partitions=args.partitions)
         if _staged[0]:
@@ -420,9 +424,7 @@ def main() -> int:
     if args.output:
         (out.drop("rules", "entities")
             .write.mode("overwrite").parquet(f"{args.output}/pages_scored"))
-        pipe_entities = out.selectExpr("url", "explode(entities) as e") \
-            .select("url", "e.*")
-        pipe_entities.write.mode("overwrite") \
+        explode_entities(out).write.mode("overwrite") \
             .parquet(f"{args.output}/entities")
         # summarize and pack from the committed parquet
         scored_src = spark.read.parquet(f"{args.output}/pages_scored")

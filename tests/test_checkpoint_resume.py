@@ -2,6 +2,7 @@
 final table identical to a clean one-shot run, no duplicate partitions."""
 
 import shutil
+from unittest import mock
 
 import pytest
 
@@ -18,6 +19,19 @@ def _table_rows(spark, sink):
     df = sink.read(spark).select("url", "keep", "scrubbed_text",
                                  "n_entities")
     return sorted(tuple(r) for r in df.collect())
+
+
+def _crash_after(sink, n):
+    """Patch ``sink`` to crash right after its n-th manifest append of
+    a run: n partitions committed, the rest not."""
+    real, appended = sink._append_manifest, []
+
+    def append(entry):
+        real(entry)
+        appended.append(entry)
+        if len(appended) == n:
+            raise RuntimeError(f"simulated failure after {n} partitions")
+    return mock.patch.object(sink, "_append_manifest", append)
 
 
 @pytest.fixture()
@@ -38,8 +52,9 @@ def test_failure_then_resume(spark, tmp_path, pipe):
 
     # crash after 2 partitions
     sink = CheckpointedSink(str(tmp_path / "tbl"), n_partitions=N_PARTS)
-    with pytest.raises(RuntimeError, match="simulated failure"):
-        sink.run(pages, pipe, input_fingerprint=fp, fail_after=2)
+    with _crash_after(sink, 2), \
+            pytest.raises(RuntimeError, match="simulated failure"):
+        sink.run(pages, pipe, input_fingerprint=fp)
     assert len(sink.committed_partitions()) == 2
 
     # resume: only the remaining partitions run
@@ -84,9 +99,10 @@ def test_wave_commits_match_single_partition_runs(spark, tmp_path, pipe):
     ref_rows = _table_rows(spark, ref)
 
     wave = CheckpointedSink(str(tmp_path / "wave"), n_partitions=N_PARTS)
-    with pytest.raises(RuntimeError, match="simulated failure"):
-        wave.run(pages, pipe, input_fingerprint=fp, wave_size=2,
-                 fail_after=3)  # crashes mid-second-wave
+    with _crash_after(wave, 3), \
+            pytest.raises(RuntimeError, match="simulated failure"):
+        # crashes mid-second-wave
+        wave.run(pages, pipe, input_fingerprint=fp, wave_size=2)
     assert len(wave.committed_partitions()) == 3
     n2 = wave.run(pages, pipe, input_fingerprint=fp, wave_size=2)
     assert n2 == 1

@@ -74,6 +74,20 @@ def test_pipeline_single_arrow_crossing(spark):
     assert count_nodes(plan, "lang_mismatch") == 0, plan[:800]
 
 
+def test_pipeline_spreads_by_url_hash(spark):
+    """salt_partitions=N is one Exchange, Spark's hash of the url into
+    N partitions, with no salt column projected before the UDF."""
+    from pii_extract_base_spark.pipeline import QualityPipeline
+    from pii_extract_base_spark.sources.pages import synth_pages
+    plan = formatted_plan(
+        QualityPipeline(salt_partitions=8)(synth_pages(spark, SF_DIR)))
+    assert count_nodes(plan, r"\(\d+\) Exchange\n") == 1, plan[:800]
+    assert count_nodes(
+        plan, r"Arguments: hashpartitioning\(url#\d+, 8\)") == 1, plan
+    assert len(arrow_eval_inputs(plan)) == 1, plan[:800]
+    assert count_nodes(plan, r"pmod\(xxhash64") == 0, plan[:800]
+
+
 def test_textstats_native_no_python(spark):
     import __spark_entry__ as mod
     plan = formatted_plan(mod.q10_token_stats(spark, SF_DIR))

@@ -117,14 +117,22 @@ def test_lsh_bucket_topk_recall(spark):
 
 
 def test_streaming_pipeline(spark, tmp_path):
+    from pii_extract_base_spark.plans import arrow_eval_inputs
     from pii_extract_base_spark.streaming.quality_stream import run_stream
+    from tests.test_run_pipeline_chain import _executions
     pages_dir = str(tmp_path / "pages_in")
     # 200 docs = classes 0..19 (drop classes included)
     synth_pages(spark, SF_DIR).limit(200).write.parquet(pages_dir)
 
+    before = set(_executions(spark))
     q = run_stream(spark, pages_dir, str(tmp_path / "ckpt"),
                    query_name="qs_test")
     q.awaitTermination(120)
+    # every micro-batch of the drain crosses into Python once
+    batches = [plan for i, plan in _executions(spark).items()
+               if "WriteToDataSourceV2" in plan and i not in before]
+    assert batches
+    assert all(len(arrow_eval_inputs(plan)) == 1 for plan in batches)
     rows = spark.sql("select * from qs_test").collect()
     assert sum(r.n_docs for r in rows) == 200
     assert any(r.keep for r in rows) and any(not r.keep for r in rows)
@@ -674,6 +682,19 @@ def test_salted_join_equivalence(spark):
 
     with pytest.raises(ValueError):
         salted_join(big, small, "k", "rid", how="full")
+
+
+@pytest.mark.parametrize("n", [4, 8, 16])
+def test_salted_repartition_balances_rows(spark, n):
+    """8,000 distinct urls spread within 10% of an even share per
+    partition."""
+    from pii_extract_base_spark.partitioning import salted_repartition
+    urls = spark.range(8000).selectExpr(
+        "concat('https://site', id % 97, '.example.org/page/', id) AS url")
+    counts = [r["count"] for r in salted_repartition(urls, "url", n)
+              .groupBy(F.spark_partition_id()).count().collect()]
+    assert sum(counts) == 8000
+    assert max(counts) / (8000 / n) <= 1.1, sorted(counts)
 
 
 def test_asof_join_null_payload(spark):

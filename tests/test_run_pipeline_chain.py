@@ -13,6 +13,8 @@ keep-first-by-url, so a re-run is identical by construction)."""
 import io
 import json
 import os
+import re
+import subprocess
 import sys
 
 SCRIPTS = os.path.join(
@@ -49,20 +51,58 @@ def _drive(monkeypatch, argv):
     return json.loads(line)
 
 
-def _executions(spark, needle="ArrowEvalPython"):
-    """{execution id: physical plan contains `needle`?} for every SQL
-    execution the session's status store holds."""
+def _executions(spark):
+    """{execution id: formatted physical plan} for every SQL execution
+    the session's status store holds."""
     lst = spark._jsparkSession.sharedState().statusStore().executionsList()
-    return {e.executionId(): needle in e.physicalPlanDescription()
+    return {e.executionId(): e.physicalPlanDescription()
             for e in (lst.apply(i) for i in range(lst.size()))}
 
 
 def _runs_of(spark, monkeypatch, argv, needle="ArrowEvalPython"):
     """(summary, new SQL executions whose plan contains `needle`)."""
-    before = set(_executions(spark, needle))
+    before = set(_executions(spark))
     summary = _drive(monkeypatch, argv)
-    return summary, [i for i, hit in _executions(spark, needle).items()
-                     if hit and i not in before]
+    return summary, [i for i, plan in _executions(spark).items()
+                     if needle in plan and i not in before]
+
+
+def test_cli_spreads_rows_by_url_hash(spark, monkeypatch):
+    """The CLI's UDF execution hash-partitions the rows by url over
+    2 x the session's parallelism, after --limit: the summary equals
+    the pipeline's over the unspread input."""
+    from pii_extract_base_spark.pipeline import QualityPipeline
+    from pii_extract_base_spark.sources.pages import synth_pages
+    before = set(_executions(spark))
+    summary = _drive(monkeypatch, [
+        "run_pipeline", "--sf-dir", SF_DIR, "--limit", "120"])
+    runs = [plan for i, plan in _executions(spark).items()
+            if "ArrowEvalPython" in plan and i not in before]
+    n = 2 * spark.sparkContext.defaultParallelism
+    assert len(runs) == 1
+    assert re.search(rf"hashpartitioning\(url#\d+, {n}\)", runs[0])
+    agg = (QualityPipeline()(synth_pages(spark, SF_DIR).limit(120))
+           .selectExpr("count(*)", "sum(cast(keep as int))",
+                       "sum(n_entities)").collect()[0])
+    assert (summary["docs"], summary["kept"], summary["entities"]) == \
+        tuple(agg)
+
+
+def test_get_spark_keeps_the_launchers_master(tmp_path):
+    """Under spark-submit --master local[2], with no core count given,
+    get_spark() runs on local[2], not on a master of its own."""
+    script = tmp_path / "master.py"
+    script.write_text(
+        "from pii_extract_base_spark.config import get_spark\n"
+        "sc = get_spark().sparkContext\n"
+        "print('MASTER', sc.master, sc.defaultParallelism)\n")
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    env["PYTHONPATH"] = os.path.dirname(SCRIPTS)
+    proc = subprocess.run(
+        ["spark-submit", "--master", "local[2]", str(script)],
+        env=env, capture_output=True, text=True, timeout=300)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "MASTER local[2] 2" in proc.stdout.splitlines(), proc.stdout
 
 
 def test_output_runs_pipeline_once(spark, monkeypatch, tmp_path):
