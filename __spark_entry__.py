@@ -718,37 +718,19 @@ def q52_decontaminate(spark, sf_dir):
             .select("doc_id", "lang"))
 
 
-def _dup_edges(docs):
-    """Shared by q53/q91: exact-dup pairs (doc ↔ its md5-group
-    representative) unioned with LSH-verified near-dup pairs
-    (Jaccard >= 0.5)."""
-    from pii_extract_base_spark.operators.dedup import (
-        lsh_candidate_pairs, ngram_jaccard_pairs)
-    fp = F.md5(F.coalesce(F.col("text"), F.lit("")))
-    ids = docs.select("doc_id", fp.alias("_fp"))
-    reps = ids.groupBy("_fp").agg(F.min("doc_id").alias("_keep"))
-    exact_pairs = (ids.join(reps, "_fp")
-                      .where(F.col("doc_id") != F.col("_keep"))
-                      .select(F.col("_keep").alias("id_a"),
-                              F.col("doc_id").alias("id_b")))
-    cand = lsh_candidate_pairs(docs, k=5, num_perm=8, band_size=2,
-                               family="md5slice", max_bucket=500)
-    near = (ngram_jaccard_pairs(docs, cand, k=5)
-            .where(F.col("jaccard") >= 0.5).select("id_a", "id_b"))
-    return exact_pairs.union(near)
-
-
 def q53_dup_clusters(spark, sf_dir):
     """Near-duplicate CLUSTERS via distributed connected components
-    (large-star/small-star, operators/graph.py): edges are the union
-    of exact-dup pairs (doc ↔ its md5-group representative) and
-    LSH-verified near-dup pairs (Jaccard >= 0.5); cluster id = min doc
+    (large-star/small-star, operators/graph.py): edges are
+    `duplicate_pairs` at Jaccard 0.5 — exact-dup pairs (doc ↔ its
+    md5-group representative) and LSH-verified near-dup pairs, the
+    same builder dedup_corpus resolves; cluster id = min doc
     id of the component. The DuckDB oracle replays the identical edge
     set and closes it with a recursive CTE — verifying the O(log²n)
     star-contraction loop against a declarative transitive closure."""
+    from pii_extract_base_spark.operators.dedup import duplicate_pairs
     from pii_extract_base_spark.operators.graph import connected_components
     docs = _t(spark, sf_dir, "documents")
-    return connected_components(_dup_edges(docs),
+    return connected_components(duplicate_pairs(docs, jaccard_threshold=0.5),
                                 node_col="doc_id", cluster_col="cluster")
 
 
@@ -2283,10 +2265,12 @@ def q91_cluster_retention(spark, sf_dir):
     per-cluster sort window. Oracle chains q53's recursive-closure
     CTEs with a serial rank replay."""
     from pii_extract_base_spark.functions.textstats import token_count
-    from pii_extract_base_spark.operators.dedup import quality_retention
+    from pii_extract_base_spark.operators.dedup import (
+        duplicate_pairs, quality_retention)
     from pii_extract_base_spark.operators.graph import connected_components
     docs = _t(spark, sf_dir, "documents")
-    clusters = connected_components(_dup_edges(docs),
+    clusters = connected_components(duplicate_pairs(docs,
+                                                    jaccard_threshold=0.5),
                                     node_col="doc_id",
                                     cluster_col="cluster")
     return quality_retention(docs, clusters,
@@ -2572,8 +2556,9 @@ def _doremi_oracle(rounds: int = 10, eta: float = 0.5,
             SELECT source, n_docs, mean_loss,
                    n_docs::DOUBLE /
                        (SELECT sum(n_docs)::DOUBLE FROM stats) AS u,
-                   round(mean_loss -
-                         (SELECT min(mean_loss) FROM stats), 9) AS lam
+                   coalesce(round(mean_loss -
+                                  (SELECT min(mean_loss) FROM stats), 9),
+                            0.0) AS lam
             FROM stats
         ),
         r0 AS (SELECT source, n_docs, mean_loss, u, lam, u AS a

@@ -6,8 +6,9 @@ sort (:254-256), dense first-use detector numbering (via
 PiiCollectionBuilder), stats (:124,251-252,297-301), document-level
 language check (:32-42,276-281).
 
-In the Spark engine this object is built once on the driver, broadcast,
-and its ``detect_chunk`` is the per-row contract of the batch UDF
+In the Spark engine each Python worker builds this object once, through
+``operators/detect.get_processor``'s per-process cache, and its
+``detect_chunk`` is the per-row contract of the batch UDF
 (SURVEY.md §3.3).
 """
 

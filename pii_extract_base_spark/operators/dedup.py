@@ -10,6 +10,8 @@
    votes), native SQL end-to-end.
  - ngram_jaccard_pairs: exact Jaccard over shingle sets for candidate
    pairs (verification step after LSH).
+ - duplicate_pairs: the one exact + near duplicate-edge builder;
+   dedup_corpus resolves its edges, and q53/q91 cluster them.
 
 Scale notes (100 TB): signatures are tiny (num_perm × 32 B) so the LSH
 band explode+groupBy shuffles signature rows, never documents; the
@@ -159,8 +161,7 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame,
     more than the signature pass it is verifying.
     """
     cand_ids = (pairs.select(F.col("id_a").alias(id_col))
-                     .union(pairs.select(F.col("id_b").alias(id_col)))
-                     .distinct())
+                     .union(pairs.select(F.col("id_b").alias(id_col))))
     sh = (df.join(cand_ids, id_col, "left_semi")
             .select(F.col(id_col), shingles(text_col, k).alias("sh")))
     out = (pairs
@@ -254,25 +255,45 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.4,
                   .where(F.col("cosine") >= threshold))
 
 
-def dedup_corpus(df: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id", k: int = 5, num_perm: int = 8,
-                 band_size: int = 2, jaccard_threshold: float = 0.8,
-                 family: str = "md5slice",
-                 max_bucket: int = 500, near: str = "lsh",
-                 resolve: str = "pairwise",
-                 quality: "Column" = None) -> DataFrame:
-    """End-to-end corpus dedup: EXACT duplicates (md5 fingerprint) plus
-    NEAR duplicates (Jaccard >= threshold) are dropped; the surviving
-    rows of ``df`` are returned.
+def duplicate_pairs(df: DataFrame, text_col: str = "text",
+                    id_col: str = "doc_id", jaccard_threshold: float = 0.8,
+                    max_bucket: int = 500, k: int = 5) -> DataFrame:
+    """The duplicate-edge set (id_a, id_b) of ``df``, the union of
+     - EXACT pairs: each doc with the min id of its `fingerprint`
+       group, as (min id, doc). One window over the fingerprint: one
+       shuffle of (id, fp), where an aggregate joined back shuffles the
+       ids twice (and a string id's min would SortAggregate);
+     - NEAR pairs (id_a < id_b): `lsh_candidate_pairs` (md5slice, 8
+       minima in 4 bands of 2) whose `ngram_jaccard_pairs` Jaccard
+       reaches ``jaccard_threshold``.
+    dedup_corpus and the q53/q91 clusters resolve this one relation.
+    LSH buckets over ``max_bucket`` are dropped (None disables; see
+    _cap_buckets); byte-identical boilerplate still pairs through the
+    exact pass, which never caps."""
+    from pyspark.sql import Window
+    fp = (df.select(F.col(id_col), fingerprint(text_col).alias("_fp"))
+            .withColumn("_keep",
+                        F.min(id_col).over(Window.partitionBy("_fp"))))
+    exact = (fp.where(F.col(id_col) != F.col("_keep"))
+               .select(F.col("_keep").alias("id_a"),
+                       F.col(id_col).alias("id_b")))
+    cand = lsh_candidate_pairs(df, text_col, id_col, k, 8, 2,
+                               "md5slice", max_bucket)
+    near = (ngram_jaccard_pairs(df, cand, text_col, id_col, k)
+            .where(F.col("jaccard") >= jaccard_threshold)
+            .select("id_a", "id_b"))
+    return exact.union(near)
 
-    Near-dup backends (``near``):
-     - "lsh" (default): banded-MinHash candidates verified by exact
-       shingle Jaccard — the widest-scale path (signatures shuffle,
-       candidate docs only are re-shingled). Probabilistic recall
-       (banding can miss a pair).
-     - "exact": capped-inverted-index Jaccard (inverted_index_jaccard)
-       — no banding false negatives; costs one posting self-join.
-     - "none": exact-duplicate pass only.
+
+def dedup_corpus(df: DataFrame, text_col: str = "text",
+                 id_col: str = "doc_id", k: int = 5,
+                 jaccard_threshold: float = 0.8, max_bucket: int = 500,
+                 resolve: str = "pairwise") -> DataFrame:
+    """End-to-end corpus dedup: EXACT duplicates (md5 fingerprint) plus
+    NEAR duplicates (banded-MinHash candidates whose shingle Jaccard is
+    >= threshold) are dropped; the surviving rows of ``df`` are
+    returned. The edges come from `duplicate_pairs`; near-dup recall is
+    probabilistic (banding can miss a pair).
 
     Pair-resolution rules (``resolve``) — they differ on open
     triangles (edges 1–3 and 2–3 but NOT 1–2):
@@ -286,68 +307,35 @@ def dedup_corpus(df: DataFrame, text_col: str = "text",
        survives. The MinHashLSH-dedup convention (C4, RefinedWeb);
        costs the O(log²n)-round star-contraction loop on the PAIR
        relation only.
-     - "best": "cc" clustering, but the survivor is the
-       HIGHEST-``quality`` doc per cluster (ties -> lowest id) via
+     - "best": "cc" clustering, but the survivor is the doc with the
+       most whitespace tokens per cluster (ties -> lowest id) via
        `quality_retention` — the Dolma/RefinedWeb retention policy.
-       ``quality`` defaults to the doc's whitespace token count
-       (keep the longest).
 
-    Plan shape at scale: one narrow anti-join per dup source — the
-    exact pass shuffles (id, fp); the LSH pass shuffles signatures and
-    shingles only candidate docs (semi-join prune). LSH buckets /
-    postings over ``max_bucket`` are dropped before pair generation;
-    byte-identical boilerplate (the usual cause of an oversized
-    bucket) is still removed by the exact pass, which never caps.
+    Plan shape at scale: the exact pass shuffles (id, fp) once; the LSH
+    pass shuffles signatures and shingles only candidate docs (semi-join
+    prune); the losers feed one anti-join as they are — a distinct
+    before it would add an aggregate the anti-join does not need.
     """
     if resolve not in ("pairwise", "cc", "best"):
         raise ValueError(f"unknown resolve rule: {resolve!r}")
-    fp = F.md5(F.coalesce(F.col(text_col), F.lit("")))
-    ids = df.select(F.col(id_col), fp.alias("_fp"))
-    exact_pairs = (ids.groupBy("_fp")
-                      .agg(F.min(id_col).alias("_keep"),
-                           F.count("*").alias("_n"))
-                      .where(F.col("_n") > 1)
-                      .join(ids, "_fp")
-                      .where(F.col(id_col) != F.col("_keep"))
-                      .select(F.col("_keep").alias("id_a"),
-                              F.col(id_col).alias("id_b")))
-
-    if near == "lsh":
-        cand = lsh_candidate_pairs(df, text_col, id_col, k, num_perm,
-                                   band_size, family, max_bucket)
-        near_pairs = (ngram_jaccard_pairs(df, cand, text_col, id_col, k)
-                      .where(F.col("jaccard") >= jaccard_threshold)
-                      .select("id_a", "id_b"))
-    elif near == "exact":
-        near_pairs = inverted_index_jaccard(
-            df, text_col, id_col, k, threshold=jaccard_threshold,
-            max_df=max_bucket).select("id_a", "id_b")
-    elif near == "none":
-        near_pairs = None
-    else:
-        raise ValueError(f"unknown near backend: {near!r}")
-
-    pairs = exact_pairs
-    if near_pairs is not None:
-        pairs = pairs.union(near_pairs)
+    pairs = duplicate_pairs(df, text_col, id_col, jaccard_threshold,
+                            max_bucket, k)
     if resolve == "pairwise":
         losers = pairs.select(F.col("id_b").alias(id_col))
-    elif resolve == "cc":
+    else:
         from .graph import connected_components
         cc = connected_components(pairs, node_col=id_col,
-                                  cluster_col="_cluster")
-        losers = (cc.where(F.col(id_col) != F.col("_cluster"))
-                    .select(id_col))
-    else:  # best
-        from .graph import connected_components
-        from ..functions.textstats import token_count
-        cc = (connected_components(pairs, node_col=id_col,
-                                   cluster_col="cluster"))
-        q = (quality if quality is not None
-             else token_count(text_col).cast("long"))
-        kept = quality_retention(df, cc, q, id_col=id_col)
-        losers = kept.where(~F.col("kept")).select(id_col)
-    return df.join(losers.distinct(), id_col, "left_anti")
+                                  cluster_col="cluster")
+        if resolve == "cc":
+            losers = (cc.where(F.col(id_col) != F.col("cluster"))
+                        .select(id_col))
+        else:
+            from ..functions.textstats import token_count
+            kept = quality_retention(df, cc,
+                                     token_count(text_col).cast("long"),
+                                     id_col=id_col)
+            losers = kept.where(~F.col("kept")).select(id_col)
+    return df.join(losers, id_col, "left_anti")
 
 
 def decontaminate(df: DataFrame, eval_df: DataFrame,
@@ -369,19 +357,30 @@ def decontaminate(df: DataFrame, eval_df: DataFrame,
     when the eval set is itself corpus-sized. Only contaminated doc
     ids flow into the anti-join either way.
     """
+    hits = (_eval_hits(df, eval_df, text_col, id_col, eval_text_col, k,
+                       broadcast_eval)
+            .where(F.col("_n_hits") > max_overlap)
+            .select(id_col))
+    return df.join(hits, id_col, "left_anti")
+
+
+def _eval_hits(df: DataFrame, eval_df: DataFrame, text_col: str,
+               id_col: str, eval_text_col: str, k: int,
+               broadcast_eval: bool) -> DataFrame:
+    """(id_col, _n_hits): per training doc with at least one hit, how
+    many of its k-gram shingles occur in the evaluation corpus. The
+    eval side reduces to its DISTINCT shingle set (a probe that must
+    not count one shingle twice) and broadcasts when asked."""
     ev = (eval_df.select(F.explode(shingles(eval_text_col, k))
                          .alias("sh"))
                  .distinct())
     if broadcast_eval:
         ev = F.broadcast(ev)
-    hits = (df.select(F.col(id_col),
+    return (df.select(F.col(id_col),
                       F.explode(shingles(text_col, k)).alias("sh"))
               .join(ev, "sh")
               .groupBy(id_col)
-              .agg(F.count("*").alias("_n_hits"))
-              .where(F.col("_n_hits") > max_overlap)
-              .select(id_col))
-    return df.join(hits, id_col, "left_anti")
+              .agg(F.count("*").alias("_n_hits")))
 
 
 def simhash_col(text_col: str = "text", bits: int = 64,
@@ -510,11 +509,9 @@ def span_dedup(df: DataFrame, text_col: str = "text",
 
     Plan at scale: one explode (docs -> ~tokens/span chunk rows), ONE
     shuffle on the chunk-text hash for the keep-first window, one
-    shuffle back on id for the ordered re-assembly — both keyed
-    shuffles, no self-join, no pair blowup (bucket size never matters
-    because only rank 1 survives, a WindowGroupLimit pushdown).  The
-    re-assembly aggregates sort_array(collect_list(struct(pos, chunk)))
-    so reconstruction order never depends on shuffle arrival order.
+    shuffle back on id for the ordered re-assembly (_reassemble) — both
+    keyed shuffles, no self-join, no pair blowup (bucket size never
+    matters because only rank 1 survives, a WindowGroupLimit pushdown).
     """
     from pyspark.sql import Window
     from ..functions.textstats import words_col
@@ -537,20 +534,31 @@ def span_dedup(df: DataFrame, text_col: str = "text",
     kept = (chunks.withColumn("rn", F.row_number().over(w))
                   .where(F.col("rn") == 1))
     base = df.select(F.col(id_col), n_chunks.alias("n_chunks"))
-    agg = (kept.groupBy(id_col)
-               .agg(F.count("*").alias("n_kept"),
-                    F.array_join(
-                        F.transform(
-                            F.sort_array(F.collect_list(
-                                F.struct("pos", "chunk"))),
-                            lambda s: s["chunk"]), " ")
-                    .alias("clean_text")))
-    return (base.join(agg, id_col, "left")
+    return (base.join(_reassemble(kept, id_col, "pos", "chunk", " "),
+                      id_col, "left")
                 .select(id_col, "n_chunks",
-                        F.coalesce("n_kept", F.lit(0).cast("long"))
+                        F.coalesce("_n_kept", F.lit(0).cast("long"))
                          .alias("n_kept"),
-                        F.coalesce("clean_text", F.lit(""))
+                        F.coalesce("_clean", F.lit(""))
                          .alias("clean_text")))
+
+
+def _reassemble(parts: DataFrame, id_col: str, pos_col: str,
+                part_col: str, sep: str) -> DataFrame:
+    """(id_col, _n_kept, _clean) per doc that kept any part: how many
+    parts survived, and their ``part_col`` joined by ``sep`` in
+    ``pos_col`` order. The ordered re-assembly of span_dedup,
+    sliding_span_dedup and line_dedup_corpus: one hash aggregate on the
+    doc id, sorting inside the aggregate so the order never depends on
+    shuffle arrival (collect_list is bounded by doc length)."""
+    return (parts.groupBy(id_col)
+                 .agg(F.count("*").alias("_n_kept"),
+                      F.array_join(
+                          F.transform(
+                              F.array_sort(F.collect_list(
+                                  F.struct(pos_col, part_col))),
+                              lambda s: s[part_col]), sep)
+                       .alias("_clean")))
 
 
 def dedup_incremental(new_df: DataFrame, archive_df: DataFrame,
@@ -588,8 +596,7 @@ def dedup_incremental(new_df: DataFrame, archive_df: DataFrame,
 
     # --- exact pass: a new doc loses iff its fingerprint group holds
     # an archive doc or a smaller-id new doc
-    fp = F.md5(F.coalesce(F.col(text_col), F.lit("")))
-    fps = (union.select(F.col(id_col), fp.alias("_fp"))
+    fps = (union.select(F.col(id_col), fingerprint(text_col).alias("_fp"))
                 .join(tags, id_col))
     grp = (fps.groupBy("_fp")
               .agg(F.max(F.when(~F.col("_new"), True).otherwise(False))
@@ -622,7 +629,7 @@ def dedup_incremental(new_df: DataFrame, archive_df: DataFrame,
          .when(F.col("_new_a"), F.col("id_a"))
          .otherwise(F.col("id_b")).alias(id_col)))
 
-    losers = exact_losers.unionByName(near_losers).distinct()
+    losers = exact_losers.unionByName(near_losers)
     return new_df.join(losers, id_col, "left_anti")
 
 
@@ -687,31 +694,23 @@ def sliding_span_dedup(df: DataFrame, text_col: str = "text",
                        F.col("pos"),
                        F.col("pos") + F.lit(window - 1))).alias("i"))
                    .distinct())
-    # rebuild is LINEAR in document length (r4 judge: the previous
-    # per-token array_contains against the removed-index array was
-    # O(words × removed) per doc — ~5e9 comparisons for one half-
-    # duplicated 100k-word book, a straggler-task generator). Here
-    # every step is a hash op: explode tokens to (id, pos) rows,
-    # LEFT ANTI hash-join away the removed positions, re-aggregate
-    # per doc (collect_list bounded by doc length, as before).
-    rm_counts = (removed.groupBy(id_col)
-                        .agg(F.count("*").alias("_n_rm")))
+    # rebuild is LINEAR in document length (a per-token array_contains
+    # against the removed-index array is O(words × removed) per doc —
+    # ~5e9 comparisons for one half-duplicated 100k-word book, a
+    # straggler-task generator). Here every step is a hash op: explode
+    # tokens to (id, pos) rows, LEFT ANTI hash-join away the removed
+    # positions, re-aggregate per doc. Every removed index is a word
+    # index (i <= n_words - 1), so n_removed = n_words - n_kept.
     tok = df.select(F.col(id_col), F.posexplode(toks).alias("i", "t"))
-    kept = (tok.join(removed, [id_col, "i"], "left_anti")
-               .groupBy(id_col)
-               .agg(F.array_join(
-                        F.transform(
-                            F.array_sort(F.collect_list(
-                                F.struct("i", "t"))),
-                            lambda s: s["t"]), " ")
-                     .alias("_clean")))
+    kept = _reassemble(tok.join(removed, [id_col, "i"], "left_anti"),
+                       id_col, "i", "t", " ")
     base = df.select(F.col(id_col), n_words.alias("n_words"))
-    return (base.join(rm_counts, id_col, "left")
-                .join(kept, id_col, "left")
+    return (base.join(kept, id_col, "left")
                 .select(
                     id_col, "n_words",
-                    F.coalesce(F.col("_n_rm"), F.lit(0)).cast("long")
-                     .alias("n_removed"),
+                    (F.col("n_words")
+                     - F.coalesce(F.col("_n_kept"), F.lit(0)))
+                     .cast("long").alias("n_removed"),
                     F.coalesce(F.col("_clean"), F.lit(""))
                      .alias("clean_text")))
 
@@ -804,18 +803,10 @@ def contamination_scores(df: DataFrame, eval_df: DataFrame,
     Returns (id_col, n_shingles, n_hits, overlap_frac, flagged) —
     overlap_frac rounded to 6 dp (cross-engine float contract).
     """
-    from ..functions.textstats import shingles, shingle_count
+    from ..functions.textstats import shingle_count
 
-    ev = (eval_df.select(F.explode(shingles(eval_text_col, k))
-                         .alias("sh"))
-                 .distinct())
-    if broadcast_eval:
-        ev = F.broadcast(ev)
-    hits = (df.select(F.col(id_col),
-                      F.explode(shingles(text_col, k)).alias("sh"))
-              .join(ev, "sh")
-              .groupBy(id_col)
-              .agg(F.count("*").alias("_n_hits")))
+    hits = _eval_hits(df, eval_df, text_col, id_col, eval_text_col, k,
+                      broadcast_eval)
     n_sh = shingle_count(text_col, k)
     frac = F.round(F.col("n_hits") / F.greatest(F.col("n_shingles"),
                                                 F.lit(1)), 6)
@@ -861,7 +852,8 @@ def line_dedup_corpus(df: DataFrame, text_col: str = "text",
       3. the frequent-line set (tiny: it's the boilerplate vocabulary
          of the crawl) hash-anti-joins the line rows — AQE broadcasts
          it when it fits;
-      4. per-doc re-aggregate (collect_list bounded by doc length).
+      4. per-doc re-aggregate (_reassemble); the line count is the
+         split's size, read off the doc row without an aggregate.
 
     Returns one row per input doc:
     (id_col, n_lines, n_removed, clean_text).
@@ -872,28 +864,19 @@ def line_dedup_corpus(df: DataFrame, text_col: str = "text",
     # would vanish from the output, breaking the one-row-per-input-doc
     # contract (and silently deleting NULL-text pages through
     # run_pipeline --dedup-lines' rewrite join)
-    lines = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.coalesce(F.col(text_col), F.lit("")),
-                             "\n", -1))
-         .alias("pos", "line"))
+    split = F.split(F.coalesce(F.col(text_col), F.lit("")), "\n", -1)
+    lines = df.select(F.col(id_col),
+                      F.posexplode(split).alias("pos", "line"))
     h = F.md5(F.trim(F.col("line")))
     freq = (lines.where(F.trim(F.col("line")) != "")
                  .groupBy(h.alias("h"))
                  .agg(F.countDistinct(id_col).alias("_ndocs"))
                  .where(F.col("_ndocs") >= min_docs)
                  .select("h"))
-    kept = lines.join(freq, h == freq["h"], "left_anti")
-    agg = (kept.groupBy(id_col)
-               .agg(F.count("*").alias("_n_kept"),
-                    F.array_join(
-                        F.transform(
-                            F.array_sort(F.collect_list(
-                                F.struct("pos", "line"))),
-                            lambda s: s["line"]), "\n")
-                     .alias("_clean")))
-    tot = lines.groupBy(id_col).agg(F.count("*").alias("n_lines"))
-    return (tot.join(agg, id_col, "left")
+    kept = _reassemble(lines.join(freq, h == freq["h"], "left_anti"),
+                       id_col, "pos", "line", "\n")
+    tot = df.select(F.col(id_col), F.size(split).alias("n_lines"))
+    return (tot.join(kept, id_col, "left")
                .select(
                    id_col,
                    F.col("n_lines").cast("long").alias("n_lines"),

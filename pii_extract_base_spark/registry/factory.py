@@ -4,8 +4,9 @@ Builds a PiiProcessor from the built-in registry plus optional user
 configs, with the FULL tagged-config merge of the reference
 (api/processor.py:45-58 via registry/config_loader): plugin options,
 additional JSON tasklists and ``task_config`` overrides all merge per
-format tag across config sources. The result is pickled into a Spark
-broadcast; the ``regex`` patterns recompile lazily on executors.
+format tag across config sources. Nothing ships the result to
+executors: each Python worker rebuilds its own processor through
+``operators/detect.get_processor``'s per-process cache.
 """
 
 import hashlib
@@ -20,10 +21,8 @@ from .detectors import builtin_tasklist
 
 def make_processor(languages: Iterable[str],
                    config: Optional[Union[Dict, List[Dict]]] = None,
-                   extra_tasklists: Optional[List[Dict]] = None,
                    include_builtin: bool = True,
-                   country: Optional[List[str]] = None,
-                   pii=None, load_plugins: bool = False) -> PiiProcessor:
+                   load_plugins: bool = False) -> PiiProcessor:
     """Create a PiiProcessor with tasks built for every language in
     ``languages`` (the per-chunk language dispatch then picks the right
     task list per row, reference api/processor.py:229-236).
@@ -43,27 +42,31 @@ def make_processor(languages: Iterable[str],
     tasks_cfg = merged.get(FMT_CONFIG_TASKS)
     if tasks_cfg:
         proc.add_json_tasks(tasks_cfg)
-    for tl in (extra_tasklists or []):
-        proc.add_json_tasks(tl)
     for lang in languages:
-        proc.build_tasks(lang, country=country, pii=pii)
+        proc.build_tasks(lang)
     return proc
+
+
+def _stable(v) -> str:
+    """JSON fallback for registry values: a callable detector task is
+    named by module and qualified name (its repr holds a memory address,
+    which differs per process); anything else by its repr."""
+    if callable(v) and hasattr(v, "__qualname__"):
+        return f"{v.__module__}.{v.__qualname__}"
+    return repr(v)
 
 
 def registry_fingerprint(languages: Iterable[str],
                          config: Optional[Dict] = None) -> str:
-    """Deterministic fingerprint of the active detector registry, recorded
-    in per-partition lineage metadata (north-star stage N8)."""
+    """Fingerprint of the active detector registry, equal in every
+    process that runs the same code, recorded in per-partition lineage
+    metadata (north-star stage N8)."""
     tl = builtin_tasklist()
     payload = {
         "languages": sorted(languages),
         "config": config or {},
-        "tasks": [
-            {k: (v if isinstance(v, (str, int, list, dict)) else repr(v))
-             for k, v in t.items()}
-            for t in tl["tasklist"]
-        ],
+        "tasks": tl["tasklist"],
         "source": tl["header"],
     }
-    blob = json.dumps(payload, sort_keys=True, default=repr).encode()
+    blob = json.dumps(payload, sort_keys=True, default=_stable).encode()
     return hashlib.sha256(blob).hexdigest()[:16]

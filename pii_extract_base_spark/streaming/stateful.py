@@ -21,11 +21,13 @@ from typing import Iterable
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import (GroupState,
                                          GroupStateTimeout)
 from pyspark.sql.types import (LongType, StructField, StructType,
                                StringType, TimestampType)
+
+from ..functions.textstats import fingerprint
 
 
 def streaming_exact_dedup(pages: DataFrame,
@@ -41,9 +43,8 @@ def streaming_exact_dedup(pages: DataFrame,
     full corpus. A second-level batch dedup (operators/dedup.py) runs
     downstream for the full-corpus guarantee.
     """
-    fp = F.md5(F.coalesce(F.col(text_col), F.lit("")))
     return (pages
-            .withColumn("_fp", fp)
+            .withColumn("_fp", fingerprint(text_col))
             .withWatermark(ts_col, watermark)
             .dropDuplicatesWithinWatermark(["_fp"])
             .drop("_fp"))

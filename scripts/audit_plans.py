@@ -11,10 +11,8 @@ properties the engine is designed around (SURVEY.md §4):
 Usage: python scripts/audit_plans.py [sf_dir] > PLANS.md
 """
 
-import io
 import re
 import sys
-from contextlib import redirect_stdout
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -94,7 +92,7 @@ AUDIT = {
     # per-doc argmax window, no Python crossing anywhere
     "q57_langid_sql": ["BroadcastHashJoin", "Window", "HashAggregate"],
     # span dedup: keep-first is a rank-1 window (WindowGroupLimit
-    # pushes the limit map-side), re-assembly is a sort_array over
+    # pushes the limit map-side), re-assembly is an array_sort over
     # collect_list structs — no self-join, no pair blowup
     "q58_span_dedup": ["WindowGroupLimit", "HashAggregate"],
     # two-phase prefix sum: per-partition windows + a tiny offsets
@@ -323,9 +321,31 @@ FORBID = {
 }
 
 
+def _audit(name, plan, expects, forbid) -> bool:
+    """Print one plan's section of the report; True iff every pattern
+    in ``expects`` is in ``plan`` and none in ``forbid`` is."""
+    ok, checks = True, []
+    for pat in expects:
+        hit = bool(re.search(pat, plan))
+        ok &= hit
+        checks.append(f"{'✓' if hit else '✗ MISSING'} `{pat}`")
+    for pat in forbid:
+        hit = bool(re.search(pat, plan))
+        ok &= not hit
+        checks.append(f"{'✓ absent' if not hit else '✗ PRESENT'} "
+                      f"`!{pat}`")
+    print(f"## {name}\n")
+    print("Expectations: " + ", ".join(checks) + "\n")
+    # keep the report readable: header section of the plan only
+    head = plan.split("\n\n")[0]
+    print("```\n" + head.strip()[:4000] + "\n```\n")
+    return ok
+
+
 def main():
     import __spark_entry__ as mod
     from pii_extract_base_spark.config import get_spark
+    from pii_extract_base_spark.plans import formatted_plan
 
     spark = get_spark(app_name="plan-audit", cores=4)
     spark.sparkContext.setLogLevel("ERROR")
@@ -339,48 +359,37 @@ def main():
 
     ok_all = True
     for name, expects in AUDIT.items():
-        df = queries[name](spark, SF_DIR)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
-        checks = []
-        for pat in expects:
-            hit = bool(re.search(pat, plan))
-            ok_all &= hit
-            checks.append(f"{'✓' if hit else '✗ MISSING'} `{pat}`")
-        for pat in FORBID.get(name, []):
-            hit = bool(re.search(pat, plan))
-            ok_all &= not hit
-            checks.append(f"{'✓ absent' if not hit else '✗ PRESENT'} "
-                          f"`!{pat}`")
-        print(f"## {name}\n")
-        print("Expectations: " + ", ".join(checks) + "\n")
-        # keep the report readable: header section of the plan only
-        head = plan.split("\n\n")[0]
-        print("```\n" + head.strip()[:4000] + "\n```\n")
+        plan = formatted_plan(queries[name](spark, SF_DIR))
+        ok_all &= _audit(name, plan, expects, FORBID.get(name, []))
 
     # minhash at production scale: xxhash64 family (long minima) must
     # use hash aggregation, not sort-based
     from pii_extract_base_spark.operators.dedup import minhash_signatures
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    sigs = minhash_signatures(docs, num_perm=8, family="xxhash64")
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        sigs.explain("formatted")
-    xplan = buf.getvalue()
+    xplan = formatted_plan(
+        minhash_signatures(docs, num_perm=8, family="xxhash64"))
     hash_ok = "HashAggregate" in xplan and "SortAggregate" not in xplan
     ok_all &= hash_ok
     print("## minhash (xxhash64 production family)\n")
     print(f"{'✓' if hash_ok else '✗ MISSING'} map-side-combinable "
           "`HashAggregate` (long minima, no sort)\n")
 
+    # dedup as `run_pipeline --dedup` builds it: string url ids, so a
+    # min(url) aggregate would SortAggregate; the exact pairs come from
+    # a window over the fingerprint instead
+    from pii_extract_base_spark.operators.dedup import dedup_corpus
+    from pii_extract_base_spark.sources.pages import synth_pages
+    ok_all &= _audit(
+        "dedup_corpus (run_pipeline --dedup, id_col=url)",
+        formatted_plan(dedup_corpus(synth_pages(spark, SF_DIR),
+                                    text_col="text", id_col="url")),
+        ["Window", "LeftAnti"], ["SortAggregate", "CartesianProduct"])
+
     # pipeline as scripts/run_pipeline.py builds it: one url-hash
     # Exchange, one ArrowEvalPython stage, its inputs, and no salt
     # projection or native rules/scrub/decision beside it
     from pii_extract_base_spark.pipeline import QualityPipeline
-    from pii_extract_base_spark.plans import arrow_eval_inputs, formatted_plan
-    from pii_extract_base_spark.sources.pages import synth_pages
+    from pii_extract_base_spark.plans import arrow_eval_inputs
     plan = formatted_plan(QualityPipeline(
         salt_partitions=2 * spark.sparkContext.defaultParallelism)(
         synth_pages(spark, SF_DIR)))

@@ -296,3 +296,22 @@ def test_compaction_crash_recovery(spark, tmp_path, pipe):
     sink.compact_partitions(spark, target_files=1)
     assert live.exists() and not parked.exists()
     assert _table_rows(spark, sink) == before
+
+
+def test_registry_fingerprint_same_in_every_process():
+    """The manifest's input_fingerprint must be equal in two fresh
+    interpreters, or a resume in a new process would see a different
+    registry. Callable detector tasks are named by module and qualified
+    name; a repr would carry a per-process memory address."""
+    import subprocess
+    import sys
+    from pathlib import Path
+    code = ("from pii_extract_base_spark.registry.factory import "
+            "registry_fingerprint as f; "
+            "print(f(('en', 'es', 'fr', 'de')))")
+    root = str(Path(__file__).resolve().parent.parent)
+    fps = {subprocess.run([sys.executable, "-c", code], cwd=root,
+                          capture_output=True, text=True,
+                          check=True).stdout.strip()
+           for _ in range(2)}
+    assert fps == {registry_fingerprint(("en", "es", "fr", "de"))}

@@ -479,6 +479,36 @@ def test_doremi_weights_null_loss_domain_not_boosted(spark):
     assert 0.0 < out["c"]["weight"] < 0.5
 
 
+def test_doremi_oracle_null_loss_domain_matches_engine(spark,
+                                                      monkeypatch):
+    """q101's DuckDB replay applies doremi_weights' NULL-loss rule: a
+    domain whose losses are all NULL takes lambda = 0, so its weight
+    is a number equal to the engine's, not NULL."""
+    import duckdb
+    import __spark_entry__ as entry
+    from pii_extract_base_spark.functions import textstats as ts
+    from pii_extract_base_spark.functions.doremi import doremi_weights
+    rows = ([("a", "one two three four five six")] * 3
+            + [("b", "x y")] * 2 + [("c", "p")] * 5)
+    df = spark.createDataFrame(rows, "source string, text string")
+    loss = F.when(F.col("source") != "b",
+                  F.log(F.lit(1.0) + ts.token_count("text")
+                        .cast("double")))
+    got = {r["source"]: r["weight"] for r in doremi_weights(
+        df, "source", loss, rounds=10, eta=0.5, smooth=0.01).collect()}
+    # the same NULL-loss domain on the DuckDB side: b's words are NULL
+    monkeypatch.setattr(
+        entry, "_DUCK_WORDS",
+        f"CASE WHEN source <> 'b' THEN {entry._DUCK_WORDS} END")
+    con = duckdb.connect()
+    con.register("documents_df", df.toPandas())
+    con.execute("CREATE TABLE documents AS SELECT * FROM documents_df")
+    want = {s: w for s, _, _, w in
+            con.execute(entry._doremi_oracle()).fetchall()}
+    assert want["b"] is not None
+    assert got == want
+
+
 def test_doremi_sample_deterministic_and_budgeted(spark):
     """doremi_sample keeps ~rate_i of each domain via the md5 kernel:
     deterministic on re-run, and the boosted domain's kept FRACTION

@@ -1,5 +1,7 @@
 """Multimodal plumbing, dedup operators, similarity recall, streaming."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -795,8 +797,8 @@ def test_image_resize_real_and_fake(spark):
 
 def test_dedup_corpus_backends_agree(spark):
     """On a corpus whose near-dups all share full MinHash bands, the
-    lsh and exact backends keep the same survivors; 'none' keeps
-    near-dups and only drops byte-identical copies."""
+    LSH pass drops the near-dup and the exact pass the byte-identical
+    copy."""
     from pii_extract_base_spark.operators.dedup import dedup_corpus
     base = " ".join(f"w{i}" for i in range(40))
     near = " ".join(f"w{i}" for i in range(40)) + " tail"
@@ -805,42 +807,57 @@ def test_dedup_corpus_backends_agree(spark):
          (3, near),                       # near-dup of 1 -> drop 3
          (4, "totally different words here entirely unrelated doc")],
         "doc_id long, text string")
-    for near_mode in ("lsh", "exact"):
-        kept = {r.doc_id for r in
-                dedup_corpus(docs, jaccard_threshold=0.5,
-                             near=near_mode).collect()}
-        assert kept == {1, 4}, near_mode
-    kept_none = {r.doc_id for r in
-                 dedup_corpus(docs, near="none").collect()}
-    assert kept_none == {1, 3, 4}
-    with pytest.raises(ValueError):
-        dedup_corpus(docs, near="bogus")
+    kept = {r.doc_id for r in
+            dedup_corpus(docs, jaccard_threshold=0.5).collect()}
+    assert kept == {1, 4}
 
 
 def test_dedup_corpus_resolve_cc_vs_pairwise(spark):
     """Open triangle (1~3 and 2~3 near-dups, 1 !~ 2): pairwise keeps 1
     AND 2 (they are not duplicates of each other); cc bridges them into
     one cluster and keeps only 1. Closed pairs agree on both rules."""
-    from pii_extract_base_spark.operators.dedup import dedup_corpus
-    a = " ".join(f"a{i}" for i in range(30))
-    b = " ".join(f"b{i}" for i in range(30))
-    # doc 3 = half of a + half of b: near-dup of both at thr 0.25,
-    # while a and b share nothing
-    mid = " ".join(f"a{i}" for i in range(15)) + " " + \
-          " ".join(f"b{i}" for i in range(15, 30))
+    from pii_extract_base_spark.operators.dedup import (
+        dedup_corpus, duplicate_pairs)
+    words = [f"w{i}" for i in range(60)]
+    # three 40-word windows 10 words apart: 1~3 and 2~3 at Jaccard
+    # 0.57, 1~2 at 0.29 — and the LSH bands pair 1-3 and 2-3
     docs = spark.createDataFrame(
-        [(1, a), (2, b), (3, mid),
+        [(1, " ".join(words[:40])), (2, " ".join(words[20:])),
+         (3, " ".join(words[10:50])),
          (4, "unrelated filler words entirely different content")],
         "doc_id long, text string")
-    kw = dict(jaccard_threshold=0.2, near="exact", max_bucket=None)
-    kept_pw = {r.doc_id for r in
-               dedup_corpus(docs, resolve="pairwise", **kw).collect()}
-    kept_cc = {r.doc_id for r in
-               dedup_corpus(docs, resolve="cc", **kw).collect()}
+    edges = {tuple(r) for r in
+             duplicate_pairs(docs, jaccard_threshold=0.5).collect()}
+    assert edges == {(1, 3), (2, 3)}
+    kept_pw = {r.doc_id for r in dedup_corpus(
+        docs, jaccard_threshold=0.5, resolve="pairwise").collect()}
+    kept_cc = {r.doc_id for r in dedup_corpus(
+        docs, jaccard_threshold=0.5, resolve="cc").collect()}
     assert kept_pw == {1, 2, 4}       # 3 drops (smaller dup exists)
     assert kept_cc == {1, 4}          # {1,2,3} is ONE cluster, min=1
     with pytest.raises(ValueError):
         dedup_corpus(docs, resolve="bogus")
+
+
+def test_dedup_corpus_job_count(spark):
+    """One dedup_corpus(...).count() over the sf0.01 documents runs a
+    pinned number of Spark jobs: the exact pairs come from one window
+    (not an aggregate joined back), and no distinct feeds the semi or
+    anti join. A plan change that adds a shuffle or a job shows here."""
+    from pii_extract_base_spark.operators.dedup import dedup_corpus
+    sc = spark.sparkContext
+    sf001 = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    docs = spark.read.parquet(f"{sf001}/documents.parquet")
+    group = "test_dedup_corpus_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        n = dedup_corpus(docs).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert n == 476
+    assert len(jobs) == 14, sorted(jobs)
 
 
 def test_decontaminate(spark):
