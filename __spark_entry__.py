@@ -2260,10 +2260,11 @@ def q91_cluster_retention(spark, sf_dir):
     `quality_retention` — the Dolma/RefinedWeb policy): q53's
     connected components assign clusters, then the LONGEST document
     per cluster is kept (ties -> lowest id) instead of blindly the
-    lowest id; singletons keep themselves. Winner election is ONE
-    max_by hash aggregate over a (quality, -id) struct — never a
-    per-cluster sort window. Oracle chains q53's recursive-closure
-    CTEs with a serial rank replay."""
+    lowest id; singletons keep themselves. Winner election is two hash
+    aggregates keyed by cluster (max quality, then min doc_id among the
+    docs that reach it), each partial + final — never a per-cluster sort
+    window. Oracle chains q53's recursive-closure CTEs with a serial
+    rank replay."""
     from pii_extract_base_spark.functions.textstats import token_count
     from pii_extract_base_spark.operators.dedup import (
         duplicate_pairs, quality_retention)

@@ -62,7 +62,9 @@ def rules_python(text: str, lang: str) -> Dict[str, bool]:
         if l.rstrip().endswith("...") or l.rstrip().endswith("…")) / n_lines
     nonempty = [l for l in lines if l.strip()]
     dup_frac = (1.0 - len(set(nonempty)) / len(nonempty)) if nonempty else 0.0
-    alpha_frac = (sum(1 for w in words if any(c.isalpha() for c in w)) / wc
+    # w.isalpha() answers most words in C; the any() only sees the rest
+    alpha_frac = (sum(1 for w in words
+                      if w.isalpha() or any(c.isalpha() for c in w)) / wc
                   if wc else 0.0)
     wl = set(w.lower() for w in words)
     stop_hits = sum(1 for s in _stopwords_for(lang) if s in wl)

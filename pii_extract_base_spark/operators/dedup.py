@@ -563,9 +563,7 @@ def _reassemble(parts: DataFrame, id_col: str, pos_col: str,
 
 def dedup_incremental(new_df: DataFrame, archive_df: DataFrame,
                       text_col: str = "text", id_col: str = "doc_id",
-                      k: int = 5, num_perm: int = 8, band_size: int = 2,
-                      jaccard_threshold: float = 0.8,
-                      family: str = "md5slice",
+                      k: int = 5, jaccard_threshold: float = 0.8,
                       max_bucket: int = 500) -> DataFrame:
     """Incremental (batch-over-archive) dedup — the shape every
     continuously-crawled corpus needs: the ARCHIVE is already deduped
@@ -608,10 +606,11 @@ def dedup_incremental(new_df: DataFrame, archive_df: DataFrame,
                               | (F.col(id_col) != F.col("_new_min")))
                        .select(id_col))
 
-    # --- near pass: banded LSH over the union, pairs restricted to
-    # (new, new) / (new, archive) BEFORE distinct; Jaccard verify
-    cand = lsh_candidate_pairs(union, text_col, id_col, k, num_perm,
-                               band_size, family, max_bucket)
+    # --- near pass: banded LSH over the union (md5slice MinHash, 8
+    # permutations in bands of 2), pairs restricted to (new, new) /
+    # (new, archive) BEFORE distinct; Jaccard verify
+    cand = lsh_candidate_pairs(union, text_col, id_col, k,
+                               family="md5slice", max_bucket=max_bucket)
     ta = tags.select(F.col(id_col).alias("id_a"),
                      F.col("_new").alias("_new_a"))
     tb = tags.select(F.col(id_col).alias("id_b"),
@@ -904,11 +903,15 @@ def quality_retention(docs: DataFrame, clusters: DataFrame,
     Plan shape at 100 TB: one left join to attach cluster ids
     (localCheckpointed so the corpus join feeds winner election AND
     the final join from ONE materialization, not two subtrees), then
-    winner election as two map-side-combinable HASH aggregates — max
+    winner election as two map-side-combinable aggregates — max
     quality per cluster, min id among the quality-maxers — instead of
     a `max_by` over a (quality, -id) struct, which Spark executes as
     SortAggregate (struct buffers aren't hash-aggregable), or a
-    per-cluster sort window over the corpus.
+    per-cluster sort window over the corpus. Both are HASH aggregates
+    when quality and ids are numeric. With string ids (``run_pipeline
+    --dedup --dedup-keep best`` keys on ``url``) the min(id) buffer is a
+    string too, so Spark runs that step, partial and final, as
+    SortAggregate keyed by cluster.
     """
     scored = docs.select(F.col(id_col), quality.alias("_q"))
     # singleton fallback: cluster = the doc's own id, cast to the
