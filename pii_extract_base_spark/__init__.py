@@ -4,4 +4,8 @@ subsuming piisa/pii-extract-base's PII detection semantics.
 See SURVEY.md for the design blueprint and BASELINE.md for targets.
 """
 
+# every process that imports the package, each Python worker included,
+# stops re-reading unchanged zip archives at every task (see zipguard.py)
+from . import zipguard  # noqa: F401
+
 __version__ = "0.1.0"

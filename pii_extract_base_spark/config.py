@@ -7,18 +7,9 @@ Settings chosen for the 100 TB design point (SURVEY.md §4):
    chunked detect path) can blow a Python worker's memory
  - the master and parallelism come from the launcher unless a core
    count is given; shuffle partitions follow the parallelism.
- - the Python worker daemon is `pyworker`: PySpark invalidates import
-   caches at every task, and on Python 3.11 that re-reads pyspark.zip's
-   directory once per zipimporter, about 0.12 CPU-s per task; pyworker
-   re-reads an archive only when its mtime or size changed. The daemon
-   imports pii_extract_base_spark as it starts, before any task adds
-   ``--py-files`` to the worker's path; a package that only
-   ``--py-files`` ships keeps PySpark's own daemon (`_daemon_module`).
 """
 
 import os
-import site
-from importlib.machinery import PathFinder
 
 from pyspark.sql import SparkSession
 
@@ -50,20 +41,6 @@ os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(1 << 30))
 os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(1 << 30))
 
 
-def _daemon_module() -> str:
-    """`pyworker` if a Python worker can import this package as it starts:
-    from the working directory (the one the JVM inherits), a PYTHONPATH
-    directory or site-packages. A package that reaches the workers only
-    through ``--py-files`` is added to their path per task, after the
-    daemon started, so those sessions keep PySpark's own daemon."""
-    path = [os.getcwd(), *site.getsitepackages(),
-            *(p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
-              if os.path.isdir(p))]
-    if PathFinder.find_spec(__package__, path) is None:
-        return "pyspark.daemon"
-    return __package__ + ".pyworker"
-
-
 def get_spark(app_name: str = "pii-extract-base-spark",
               cores: int = None,
               shuffle_partitions: int = None,
@@ -87,9 +64,6 @@ def get_spark(app_name: str = "pii-extract-base-spark",
         # bigger JVM<->python-worker pipe buffer: fewer syscalls per
         # Arrow batch (same kernel-contention story as above)
         .config("spark.buffer.size", "1048576")
-        # the Python worker daemon re-reads a zip archive's directory only
-        # when the archive changed, not at every task (see pyworker.py)
-        .config("spark.python.daemon.module", _daemon_module())
         .config("spark.ui.enabled", "false")
         # managed-table warehouse + metastore OUTSIDE the repo (bucketed
         # tables for co-located joins live here; see sources/bucketed.py)

@@ -1,5 +1,4 @@
-"""PySpark's worker daemon, with each zip archive's directory re-read only
-when the archive changed.
+"""Re-read a zip archive's directory only when the archive changed.
 
 PySpark calls ``importlib.invalidate_caches()`` at the start of every
 Python task (``worker_util.setup_spark_files``). On Python 3.11 that makes
@@ -8,9 +7,11 @@ directory: about 16 importers over pyspark.zip's 1,328 entries, 0.12 CPU-s
 per task. Here an importer re-reads only when its archive's
 ``(st_mtime_ns, st_size)`` differs from its own last read, so a rewritten
 archive is still picked up. The state is per importer because each one
-holds its own ``_files``. `config.get_spark` runs this module as
-``spark.python.daemon.module`` when a worker can import it as it starts;
-the workers the daemon forks inherit the guard.
+holds its own ``_files``.
+
+The package's ``__init__`` imports this module, so the guard is in every
+process that imports the package: each Python worker from the first task
+whose UDF comes from the package, however the package was shipped.
 """
 
 import functools
@@ -35,7 +36,3 @@ def invalidate_caches(self):
 
 
 zipimport.zipimporter.invalidate_caches = invalidate_caches
-
-if __name__ == "__main__":
-    from pyspark.daemon import manager
-    manager()

@@ -1,4 +1,4 @@
-"""The Python worker daemon module (pyworker) and its zip-directory guard."""
+"""The zip-directory guard (zipguard) that importing the package installs."""
 
 import importlib
 import os
@@ -23,7 +23,7 @@ def test_zip_directory_reread_only_when_archive_changes(tmp_path,
                         zipimport.zipimporter.invalidate_caches)
     # a second import must wrap PySpark's method, not the guard itself
     importlib.reload(importlib.import_module(
-        "pii_extract_base_spark.pyworker"))
+        "pii_extract_base_spark.zipguard"))
     reads = []
     real = zipimport._read_directory
     monkeypatch.setattr(zipimport, "_read_directory",
@@ -50,52 +50,41 @@ def test_zip_directory_reread_only_when_archive_changes(tmp_path,
         sys.path_importer_cache.pop(archive, None)
 
 
-def test_daemon_module_needs_the_package_at_worker_start(tmp_path,
-                                                         monkeypatch):
-    """A worker starts in the driver's working directory with its
-    PYTHONPATH; a package that only --py-files ships is not there yet."""
-    from pii_extract_base_spark.config import _daemon_module
-    monkeypatch.delenv("PYTHONPATH", raising=False)
-    monkeypatch.chdir(ROOT)
-    assert _daemon_module() == "pii_extract_base_spark.pyworker"
-    monkeypatch.chdir(tmp_path)
-    assert _daemon_module() == "pyspark.daemon"
-    monkeypatch.setenv("PYTHONPATH", ROOT)
-    assert _daemon_module() == "pii_extract_base_spark.pyworker"
-
-
 def test_warm_workers_do_not_reread_zip_directories(spark):
-    """Each worker counts zip-directory reads from its first task on.
-    PySpark invalidates import caches at every task; with the guard an
-    unchanged archive is not re-read, where PySpark's own daemon re-reads
-    pyspark.zip once per zipimporter (~16) per task."""
+    """Each worker counts its tasks and its zip-directory reads. PySpark
+    invalidates import caches at every task; once a worker has imported
+    the package (every pipeline UDF does on its first task), an unchanged
+    archive is not re-read, where unguarded it re-reads pyspark.zip once
+    per zipimporter (~16) per task. The guard's first call on a worker
+    reads each importer once, so reads may grow up to its second task."""
     import pandas as pd
     from pyspark.sql import functions as F
 
-    @F.pandas_udf("pid long, reads long, archives long")
+    @F.pandas_udf("pid long, task long, reads long")
     def zip_reads(ids: pd.Series) -> pd.DataFrame:
         import zipimport
+        import pii_extract_base_spark  # noqa: F401
         if not hasattr(zipimport, "_reads"):        # once per worker
-            zipimport._reads = 0
+            zipimport._reads = zipimport._tasks = 0
             inner = zipimport._read_directory
 
             def counted(path):
                 zipimport._reads += 1
                 return inner(path)
             zipimport._read_directory = counted
-        archives = {f.archive for f in sys.path_importer_cache.values()
-                    if isinstance(f, zipimport.zipimporter)}
-        return pd.DataFrame({"pid": os.getpid(), "reads": zipimport._reads,
-                             "archives": len(archives)}, index=ids.index)
+        zipimport._tasks += 1
+        return pd.DataFrame({"pid": os.getpid(), "task": zipimport._tasks,
+                             "reads": zipimport._reads}, index=ids.index)
 
     n_tasks = 32
     rows = (spark.range(0, n_tasks, 1, n_tasks)
             .select(zip_reads("id").alias("r")).select("r.*").collect())
     assert len(rows) == n_tasks
-    by_worker = defaultdict(list)
+    by_worker = defaultdict(dict)
     for r in rows:
-        by_worker[r.pid].append(r)
+        by_worker[r.pid][r.task] = r.reads
     # the workers were reused, so later tasks ran on warm workers
     assert max(len(v) for v in by_worker.values()) >= 3
-    for v in by_worker.values():
-        assert max(r.reads for r in v) <= max(r.archives for r in v)
+    for reads in by_worker.values():
+        warm = [n for task, n in reads.items() if task >= 2]
+        assert len(set(warm)) <= 1, reads
