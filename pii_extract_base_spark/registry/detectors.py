@@ -85,11 +85,14 @@ PHONE_CONTEXT_DE = {"value": ["tel", "telefon", "fax", "handy"],
 
 
 # ---------------------------------------------------------------------------
-# Email address (regex; written for regex.X mode — no literal spaces)
+# Email address (regex; written for regex.X mode — no literal spaces).
+# The local part is capped at 64 characters (RFC 5321): unbounded, a
+# long run of local-part characters before an '@' is rescanned from
+# every word boundary in it, quadratic in the run's length.
 
 PATTERN_EMAIL = r"""
     \b
-    [\w.%+-]+
+    [\w.%+-]{1,64}
     @
     (?: [A-Za-z0-9](?:[A-Za-z0-9-]{0,61}[A-Za-z0-9])? \. )+
     [A-Za-z]{2,24}

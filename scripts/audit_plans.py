@@ -374,25 +374,23 @@ def main():
     print(f"{'✓' if hash_ok else '✗ MISSING'} map-side-combinable "
           "`HashAggregate` (long minima, no sort)\n")
 
-    # dedup as `run_pipeline --dedup` builds it: string url ids, so a
-    # min(url) aggregate would SortAggregate; the exact pairs come from
-    # a window over the fingerprint instead
-    from pii_extract_base_spark.operators.dedup import dedup_corpus
+    # run_pipeline's --dedup stage (pii_extract_base_spark/chain.py):
+    # string url ids, so a min(url) aggregate would SortAggregate; the
+    # exact pairs come from a window over the fingerprint instead
+    from pii_extract_base_spark import chain
     from pii_extract_base_spark.sources.pages import synth_pages
     ok_all &= _audit(
         "dedup_corpus (run_pipeline --dedup, id_col=url)",
-        formatted_plan(dedup_corpus(synth_pages(spark, SF_DIR),
-                                    text_col="text", id_col="url")),
+        formatted_plan(chain.run_chain(synth_pages(spark, SF_DIR),
+                                       [("--dedup", chain.dedup)])),
         ["Window", "LeftAnti"], ["SortAggregate", "CartesianProduct"])
 
-    # pipeline as scripts/run_pipeline.py builds it: one url-hash
-    # Exchange, one ArrowEvalPython stage, its inputs, and no salt
-    # projection or native rules/scrub/decision beside it
-    from pii_extract_base_spark.pipeline import QualityPipeline
+    # run_pipeline's pipeline: one url-hash Exchange, one
+    # ArrowEvalPython stage, its inputs, and no salt projection or
+    # native rules/scrub/decision beside it
     from pii_extract_base_spark.plans import arrow_eval_inputs
-    plan = formatted_plan(QualityPipeline(
-        salt_partitions=2 * spark.sparkContext.defaultParallelism)(
-        synth_pages(spark, SF_DIR)))
+    plan = formatted_plan(
+        chain.quality_pipeline(spark)(synth_pages(spark, SF_DIR)))
     n_arrow = len(arrow_eval_inputs(plan))
     n_exchange = len(re.findall(r"\(\d+\) Exchange\n", plan))
     spread = n_exchange == 1 and "Arguments: hashpartitioning(url#" in plan

@@ -67,7 +67,14 @@ def main():
                       extra_conf={"spark.ui.enabled": "true"})
     spark.sparkContext.setLogLevel("ERROR")
     out = Path(args.out)
-    results = {}
+
+    def report(job, t0, n=None, **values):
+        """Print a job's JSON line: wall time, ``values`` and, given
+        the ``n`` docs it read, docs/s."""
+        sec = time.time() - t0
+        rate = {"docs_per_sec": round(n / sec, 0)} if n else {}
+        print(json.dumps({"job": job, "sec": round(sec, 1), **values,
+                          **rate}), flush=True)
 
     # -- 0. amplify documents to >= 3M rows (written once, reused) ---------
     docs_path = out / "documents"
@@ -91,10 +98,7 @@ def main():
                    .repartition(args.cores * 4))
         amp.write.mode("overwrite").parquet(str(docs_path))
     n_docs = spark.read.parquet(str(docs_path)).count()
-    results["amplify"] = {"sec": round(time.time() - t0, 1),
-                          "docs": n_docs}
-    print(json.dumps({"job": "amplify", **results["amplify"]}),
-          flush=True)
+    report("amplify", t0, docs=n_docs)
 
     big = spark.read.parquet(str(docs_path))
 
@@ -106,12 +110,8 @@ def main():
            .agg(F.count("*").alias("docs"),
                 F.sum(F.col("keep").cast("int")).alias("kept"),
                 F.sum("n_entities").alias("entities")).collect()[0])
-    sec = time.time() - t0
-    results["pipeline"] = {"sec": round(sec, 1), "docs": agg["docs"],
-                           "kept": agg["kept"],
-                           "docs_per_sec": round(agg["docs"] / sec, 0)}
-    print(json.dumps({"job": "pipeline", **results["pipeline"]}),
-          flush=True)
+    report("pipeline", t0, agg["docs"], docs=agg["docs"],
+           kept=agg["kept"])
 
     # -- 2. corpus dedup (exact + MinHash-LSH near) -------------------------
     from pii_extract_base_spark.operators.dedup import dedup_corpus
@@ -123,13 +123,8 @@ def main():
     # (where any survivor represents the cluster anyway)
     kept = dedup_corpus(big, id_col="doc_id", text_col="text",
                         max_bucket=50)
-    n_kept = kept.count()
-    sec = time.time() - t0
-    results["dedup_corpus"] = {"sec": round(sec, 1), "in": n_docs,
-                               "kept": n_kept,
-                               "docs_per_sec": round(n_docs / sec, 0)}
-    print(json.dumps({"job": "dedup_corpus", **results["dedup_corpus"]}),
-          flush=True)
+    report("dedup_corpus", t0, n_docs, **{"in": n_docs},
+           kept=kept.count())
 
     # -- 3. dataset mixing over the full corpus -----------------------------
     from pii_extract_base_spark.functions.sampling import mixture_sample
@@ -138,12 +133,7 @@ def main():
     t0 = time.time()
     mixed = mixture_sample(big, "source", "doc_id", shares,
                            budget=1_000_000)
-    n_mixed = mixed.count()
-    sec = time.time() - t0
-    results["mixture_sample"] = {"sec": round(sec, 1), "picked": n_mixed,
-                                 "docs_per_sec": round(n_docs / sec, 0)}
-    print(json.dumps({"job": "mixture_sample",
-                      **results["mixture_sample"]}), flush=True)
+    report("mixture_sample", t0, n_docs, picked=mixed.count())
 
     # -- 4. boilerplate line dedup over the full corpus ---------------------
     # frame every doc with a shared banner/footer so the frequent-line
@@ -154,20 +144,15 @@ def main():
     from pii_extract_base_spark.operators.dedup import line_dedup_corpus
     t0 = time.time()
     framed = big.select(
-        "doc_id",
+        "doc_id", "lang", "source",
         F.concat_ws("\n", F.lit("accept all cookies to continue"),
                     F.col("text"),
-                    F.lit("copyright example corp"))
-         .alias("text"))
+                    F.lit("copyright example corp")).alias("text"))
     ld = line_dedup_corpus(framed, min_docs=2)
     row = ld.agg(F.count("*").alias("docs"),
                  F.sum("n_removed").alias("lines_removed")).collect()[0]
-    sec = time.time() - t0
-    results["line_dedup"] = {"sec": round(sec, 1), "docs": row["docs"],
-                             "lines_removed": row["lines_removed"],
-                             "docs_per_sec": round(n_docs / sec, 0)}
-    print(json.dumps({"job": "line_dedup", **results["line_dedup"]}),
-          flush=True)
+    report("line_dedup", t0, n_docs, docs=row["docs"],
+           lines_removed=row["lines_removed"])
 
     # -- 5. corpus-fit bigram LM + perplexity scoring (q90's op) -----------
     # the CCNet selection stage at full width: fit on the en slice
@@ -179,12 +164,8 @@ def main():
     scored = lm_fit_score(big, F.col("lang") == "en")
     row = scored.agg(F.count("*").alias("docs"),
                      F.avg("logppl").alias("mean_ppl")).collect()[0]
-    sec = time.time() - t0
-    results["lm_fit_score"] = {"sec": round(sec, 1), "docs": row["docs"],
-                               "mean_ppl": round(row["mean_ppl"], 3),
-                               "docs_per_sec": round(n_docs / sec, 0)}
-    print(json.dumps({"job": "lm_fit_score", **results["lm_fit_score"]}),
-          flush=True)
+    report("lm_fit_score", t0, n_docs, docs=row["docs"],
+           mean_ppl=round(row["mean_ppl"], 3))
 
     # -- 6. concat-and-chunk sequence packing (q89's op) -------------------
     from pii_extract_base_spark.operators.sharding import (
@@ -195,13 +176,8 @@ def main():
     man = example_manifest(spans, seq_len=2048)
     row = man.agg(F.count("*").alias("examples"),
                   F.sum("n_tokens").alias("tokens")).collect()[0]
-    sec = time.time() - t0
-    results["pack_examples"] = {"sec": round(sec, 1),
-                                "examples": row["examples"],
-                                "tokens": row["tokens"],
-                                "docs_per_sec": round(n_docs / sec, 0)}
-    print(json.dumps({"job": "pack_examples",
-                      **results["pack_examples"]}), flush=True)
+    report("pack_examples", t0, n_docs, examples=row["examples"],
+           tokens=row["tokens"])
 
     # -- 7. packed-example WRITER (q94's op) --------------------------------
     # the materialization half: every corpus token crosses the
@@ -216,66 +192,38 @@ def main():
                                   num_partitions=args.cores * 4)
     row = packed.agg(F.count("*").alias("examples"),
                      F.sum("n_tokens").alias("tokens")).collect()[0]
-    sec = time.time() - t0
-    results["materialize_examples"] = {
-        "sec": round(sec, 1), "examples": row["examples"],
-        "tokens": row["tokens"],
-        "docs_per_sec": round(n_docs / sec, 0)}
-    print(json.dumps({"job": "materialize_examples",
-                      **results["materialize_examples"]}), flush=True)
+    report("materialize_examples", t0, n_docs, examples=row["examples"],
+           tokens=row["tokens"])
 
     # -- 8. the CHAINED curation pipeline (run_pipeline's stage chain) ------
     # composition is the hazard the single-op jobs cannot see: every
     # stage references its input relation several times internally, so
     # the chained LOGICAL plan grows multiplicatively with stage count
     # and Catalyst's DeduplicateRelations OOMed the driver before any
-    # task ran (BENCH.md). run_pipeline cuts lineage between stages
-    # with a lazy localCheckpoint; this job drives the same cut chain
-    # at 3.2M docs: sample → doc dedup → line dedup → ppl cut → mix.
-    from pii_extract_base_spark.functions.lmtrain import lm_fit_score
-    from pii_extract_base_spark.functions.sampling import (
-        quantile_cut_scalable, stratified_sample)
+    # task ran (BENCH.md). This job runs run_pipeline's own stages and
+    # lineage cuts (pii_extract_base_spark/chain.py) at 3.2M docs:
+    # sample → doc dedup → line dedup → ppl cut → mix.
+    from functools import partial
+    from pii_extract_base_spark import chain
+    langs = [r["lang"] for r in big.select("lang").distinct().collect()]
     t0 = time.time()
-    cur = big.select(
-        "doc_id", "lang", "source",
-        F.concat_ws("\n", F.lit("accept all cookies to continue"),
-                    F.col("text"),
-                    F.lit("copyright example corp")).alias("text"))
-    cur = stratified_sample(cur, "lang", "doc_id", {"en": 0.8},
-                            default_rate=0.8)
-    cur = cur.localCheckpoint(eager=False)
-    cur = dedup_corpus(cur, id_col="doc_id", text_col="text",
-                       max_bucket=50)
-    cur = cur.localCheckpoint(eager=False)
-    cleaned = line_dedup_corpus(cur, text_col="text", id_col="doc_id",
-                                min_docs=2)
-    cur = cur.drop("text").join(
-        cleaned.select("doc_id", F.col("clean_text").alias("text")),
-        "doc_id")
-    cur = cur.localCheckpoint(eager=False)
-    scored = lm_fit_score(cur, F.col("lang") == "en",
-                          text_col="text", id_col="doc_id")
-    cur = (cur.join(scored.select(
-               "doc_id", (-F.col("logppl")).alias("_neg_ppl")),
-               "doc_id")
-              .withColumn("_all", F.lit("all")))
-    cur = (quantile_cut_scalable(cur, "_all", "_neg_ppl", 0.9,
-                                 "doc_id")
-           .drop("_all", "_neg_ppl"))
-    cur = cur.localCheckpoint(eager=False)
-    cur = mixture_sample(cur, "source", "doc_id", shares,
-                         budget=500_000)
-    n_chain = cur.count()
-    sec = time.time() - t0
-    results["curation_chain"] = {
-        "sec": round(sec, 1), "in": n_docs, "picked": n_chain,
-        "docs_per_sec": round(n_docs / sec, 0)}
-    print(json.dumps({"job": "curation_chain",
-                      **results["curation_chain"]}), flush=True)
-
-    results["stage_peaks"] = stage_peaks(spark)
+    cur = chain.run_chain(framed, [  # job 4's framed corpus
+        ("sample", partial(chain.sample, rates=dict.fromkeys(langs, 0.8),
+                           id_col="doc_id")),
+        # job 2's bucket cap for the amplified near-copy clusters
+        ("dedup", partial(dedup_corpus, text_col="text", id_col="doc_id",
+                          max_bucket=50)),
+        ("dedup-lines", partial(chain.dedup_lines, min_docs=2,
+                                id_col="doc_id")),
+        ("ppl-cut", partial(chain.ppl_cut, lang="en", frac=0.9,
+                            id_col="doc_id")),
+        ("mix", partial(chain.mix, shares=dict.fromkeys(
+            langs, 1.0 / len(langs)), budget=500_000, id_col="doc_id")),
+    ])
+    report("curation_chain", t0, n_docs, **{"in": n_docs},
+           picked=cur.count())
     print(json.dumps({"job": "summary", "n_docs": n_docs,
-                      **results["stage_peaks"]}), flush=True)
+                      **stage_peaks(spark)}), flush=True)
     return 0
 
 

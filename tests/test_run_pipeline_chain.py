@@ -17,6 +17,8 @@ import re
 import subprocess
 import sys
 
+import pytest
+
 SCRIPTS = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "scripts")
@@ -242,3 +244,81 @@ def test_split_stage_is_deterministic_and_leakage_safe(spark,
     assert set(a["splits"]) <= {"train", "val", "test"}
     assert sum(a["splits"].values()) == 200
     assert a["docs"] == a["splits"].get("train", 0)
+
+
+def test_checkpoint_summary_has_the_plain_keys(spark, monkeypatch,
+                                               tmp_path):
+    """--checkpoint prints the plain run's summary keys (splits and
+    docs_per_sec too) plus the sink's partition counts, and the same
+    counts."""
+    argv = ["run_pipeline", "--sf-dir", SF_DIR, "--limit", "200",
+            "--split", "train=0.9,val=0.05,test=0.05"]
+    plain = _drive(monkeypatch, argv)
+    ckpt = _drive(monkeypatch, argv + [
+        "--checkpoint", str(tmp_path / "tbl"), "--partitions", "2",
+        "--wave-size", "2"])
+    assert set(ckpt) == set(plain) | {"partitions_committed_this_run",
+                                      "partitions_total"}
+    assert ckpt["partitions_committed_this_run"] == 2
+    assert ckpt["partitions_total"] == 2
+    for k in ("docs", "kept", "entities", "splits"):
+        assert ckpt[k] == plain[k], k
+
+
+@pytest.mark.parametrize("argv", [
+    ["--ppl-cut", "en"],
+    ["--dsir", "en"],
+    ["--sample", "en"],
+    ["--mix", "en=x", "--mix-budget", "10"],
+    ["--split", "train"],
+    ["--split", "train=0.5,val=0.1"],
+])
+def test_malformed_spec_is_a_usage_error(monkeypatch, capsys, argv):
+    """A malformed KEY=VALUE spec, or split fractions that do not sum
+    to 1, exit with status 2 and a message naming the flag, not a
+    traceback."""
+    with pytest.raises(SystemExit) as exc:
+        _drive(monkeypatch, ["run_pipeline", "--sf-dir", SF_DIR] + argv)
+    assert exc.value.code == 2
+    assert f"error: {argv[0]} expects" in capsys.readouterr().err
+
+
+def test_chain_cuts_lineage_before_every_stage_but_the_first(spark):
+    """run_chain's lineage-cut policy: a one-stage chain's plan holds no
+    cut (a LogicalRDD, planned as a Scan ExistingRDD); a chain of n
+    stages cuts n-1 times, before every stage but the first; cut_after
+    cuts once more after the last stage."""
+    from functools import partial
+    from pii_extract_base_spark import chain
+    from pii_extract_base_spark.plans import formatted_plan
+    from pii_extract_base_spark.sources.pages import synth_pages
+
+    pages = synth_pages(spark, SF_DIR).limit(100)
+    seen = []
+
+    def is_cut(df):
+        return bool(re.search(r"LogicalRDD|ExistingRDD",
+                              formatted_plan(df)))
+
+    def spy(stage):
+        def run(df):
+            seen.append(is_cut(df))
+            return stage(df)
+        return run
+
+    sample = partial(chain.sample, rates={"en": 0.9, "fr": 0.9})
+    one = chain.run_chain(pages, [("--sample", spy(sample))])
+    assert seen == [False] and not is_cut(one)
+
+    seen.clear()
+    stages = [("--sample", spy(sample)),
+              ("--mix-temperature", spy(partial(
+                  chain.mix_temperature, alpha=0.3, frac=0.8))),
+              ("--dedup-lines", spy(partial(chain.dedup_lines,
+                                            min_docs=3)))]
+    chain.run_chain(pages, stages)
+    assert seen == [False, True, True]
+
+    seen.clear()
+    assert is_cut(chain.run_chain(pages, stages[:1], cut_after=True))
+    assert not is_cut(chain.run_chain(pages, [], cut_after=True))
