@@ -49,7 +49,7 @@ def rules_python(text: str, lang: str) -> Dict[str, bool]:
     text = text or ""
     words = text.split()
     wc = len(words)
-    mean_wl = (sum(len(w) for w in words) / wc) if wc else 0.0
+    mean_wl = (sum(map(len, words)) / wc) if wc else 0.0
     n_chars = len(text)
     symbol_frac = (sum(text.count(c) for c in SYMBOL_CHARS) / n_chars
                    if n_chars else 0.0)
@@ -64,9 +64,9 @@ def rules_python(text: str, lang: str) -> Dict[str, bool]:
     dup_frac = (1.0 - len(set(nonempty)) / len(nonempty)) if nonempty else 0.0
     # w.isalpha() answers most words in C; the any() only sees the rest
     alpha_frac = (sum(1 for w in words
-                      if w.isalpha() or any(c.isalpha() for c in w)) / wc
+                      if w.isalpha() or any(map(str.isalpha, w))) / wc
                   if wc else 0.0)
-    wl = set(w.lower() for w in words)
+    wl = set(map(str.lower, words))
     stop_hits = sum(1 for s in _stopwords_for(lang) if s in wl)
 
     return {

@@ -15,7 +15,9 @@ Models are built deterministically at import from the embedded seed
 vocabulary (functions/langdata.py) — no RNG, no external files.
 """
 
+import functools
 import math
+import operator
 import os
 from typing import Dict, List, Tuple
 
@@ -40,23 +42,21 @@ _SHIFT = np.uint64(64 - 16)               # keep top 16 bits → N_BUCKETS
 
 def _bucket_hashes(data: bytes, nmin: int = 1, nmax: int = 3) -> np.ndarray:
     """Bucket indices of every byte n-gram, fully vectorized: one
-    polynomial rolling hash per n (uint64 wraparound), multiply-shift
-    mixed down to 16 bits. No per-gram Python — the n-gram pass is
-    3 numpy ops per n, which is what lets the fused langid+ppl UDF keep
-    up with the native stages."""
+    polynomial rolling hash per n (uint64 wraparound), each n's built
+    from the (n-1)-grams', then one multiply-shift mix down to 16 bits
+    over them all. No per-gram Python — the n-gram pass is 2 numpy ops
+    per n, which is what lets the fused langid+ppl UDF keep up with the
+    native stages."""
     b = np.frombuffer(data, dtype=np.uint8).astype(np.uint64)
-    L = len(b)
-    outs = []
-    for n in range(nmin, nmax + 1):
-        if L < n:
-            continue
-        h = np.zeros(L - n + 1, dtype=np.uint64)
-        for j in range(n):
-            h = h * _POLY_B + b[j:L - n + 1 + j]
-        outs.append((h * _MIX) >> _SHIFT)
+    outs, h = [], b
+    for n in range(1, min(nmax, len(b)) + 1):
+        if n > 1:       # h_n = h_{n-1} * B + next byte
+            h = h[:-1] * _POLY_B + b[n - 1:]
+        if n >= nmin:
+            outs.append(h)
     if not outs:
         return np.empty(0, dtype=np.int64)
-    return np.concatenate(outs).astype(np.int64)
+    return ((np.concatenate(outs) * _MIX) >> _SHIFT).astype(np.int64)
 
 
 def _ngram_hashes(text: str, nmin: int = 1, nmax: int = 3) -> List[int]:
@@ -185,9 +185,13 @@ def score_text(text: str) -> Tuple[str, float, float]:
     # --- perplexity under the predicted (or en-fallback) LM
     lm_lang = lang_pred if lang_pred != UND else "en"
     words = snippet.split()
-    lp_sum = 0.0
-    for w in words:
-        lp_sum += _word_logprob(w, lm_lang)
+    lps = list(map(_WORD_LP_CACHE[lm_lang].get, words))
+    if None in lps:
+        lps = [_word_logprob(w, lm_lang) if lp is None else lp
+               for w, lp in zip(words, lps)]
+    # a left-to-right sum, bit-identical to a += loop (sum() is
+    # compensated from Python 3.12 on)
+    lp_sum = functools.reduce(operator.add, lps, 0.0)
     logppl = -lp_sum / max(len(words), 1)
     return lang_pred, lang_conf, logppl
 

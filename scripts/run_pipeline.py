@@ -29,7 +29,8 @@ def main() -> int:
     ap.add_argument("--limit", type=int, default=None)
     ap.add_argument("--checkpoint", default=None,
                     help="checkpointed table dir: per-partition commits "
-                         "with lineage; re-running resumes idempotently")
+                         "with lineage; re-running resumes idempotently "
+                         "(not with --output)")
     ap.add_argument("--partitions", type=int, default=8,
                     help="logical commit partitions for --checkpoint")
     ap.add_argument("--wave-size", type=int, default=4,
@@ -130,6 +131,9 @@ def main() -> int:
     args = ap.parse_args()
     if bool(args.mix) != (args.mix_budget is not None):
         ap.error("--mix and --mix-budget must be given together")
+    if args.checkpoint and args.output:
+        ap.error("--checkpoint writes its own table; it cannot also "
+                 "write --output")
 
     from functools import partial
     from pii_extract_base_spark import chain
@@ -257,9 +261,8 @@ def main() -> int:
             scored_src = spark.read.parquet(f"{args.output}/pages_scored")
     summary = _summary(scored_src)
     if args.pack:
-        extra.update(_pack_stats(
-            spark, scored_src, args.pack,
-            None if args.checkpoint else args.output))
+        extra.update(_pack_stats(spark, scored_src, args.pack,
+                                 args.output))
     dt = time.time() - t0
     print(json.dumps({
         **summary, **({"splits": split_counts} if split_counts else {}),

@@ -283,6 +283,26 @@ def test_malformed_spec_is_a_usage_error(monkeypatch, capsys, argv):
     assert f"error: {argv[0]} expects" in capsys.readouterr().err
 
 
+def test_checkpoint_with_output_is_a_usage_error(monkeypatch, capsys,
+                                                tmp_path):
+    """--checkpoint writes only its own table, so --output beside it
+    would be silently ignored: the pair exits with status 2 before
+    Spark starts."""
+    from pii_extract_base_spark import config
+
+    def no_spark(*a, **k):
+        raise AssertionError("Spark started")
+    monkeypatch.setattr(config, "get_spark", no_spark)
+    with pytest.raises(SystemExit) as exc:
+        _drive(monkeypatch, [
+            "run_pipeline", "--sf-dir", SF_DIR, "--limit", "10",
+            "--checkpoint", str(tmp_path / "tbl"),
+            "--output", str(tmp_path / "out")])
+    assert exc.value.code == 2
+    assert "error: --checkpoint" in capsys.readouterr().err
+    assert not (tmp_path / "out").exists()
+
+
 def test_chain_cuts_lineage_before_every_stage_but_the_first(spark):
     """run_chain's lineage-cut policy: a one-stage chain's plan holds no
     cut (a LogicalRDD, planned as a Scan ExistingRDD); a chain of n
