@@ -105,31 +105,20 @@ def doremi_sample(df: DataFrame, domain_col: str, key_col: str,
     """Execute a DoReMi mixture: keep each row of domain i with
     probability rate_i = min(1, B·w_i / n_i) where B = floor(
     budget_frac·N) — the same capped-rate rule as
-    `sampling.temperature_sample`, via the shared md5 acceptance
-    kernel (deterministic in ``key_col``, resume-stable). ``weights``
+    `sampling.temperature_sample`, via `sampling.accept_at_rates`
+    (deterministic in ``key_col``, resume-stable). ``weights``
     is `doremi_weights`'s collected (domain, n_docs, mean_loss,
-    weight) rows (a tiny literal relation — it broadcasts)."""
-    from .sampling import BUCKETS, hash_bucket
+    weight) rows (a tiny literal relation); ``rate_alias`` exposes the
+    applied rate column."""
+    from .sampling import accept_at_rates
     if not 0.0 < budget_frac <= 1.0:
         raise ValueError(f"budget_frac out of (0,1]: {budget_frac}")
-    if rate_alias and rate_alias in df.columns:
-        raise ValueError(
-            f"rate_alias {rate_alias!r} collides with an input column")
     total = float(sum(int(w[1]) for w in weights))
     budget = math.floor(budget_frac * total + 1e-9)
     rows = [(w[0], _qround(min(1.0, budget * float(w[3]) / int(w[1])),
                            6)) for w in weights]
-    spark = df.sparkSession
     dtype = (df.select(F.col(domain_col)).schema[0].dataType
              .simpleString())
-    rates = spark.createDataFrame(
-        rows, f"`_dr_d` {dtype}, `_dr_rate` double")
-    joined = (df.join(F.broadcast(rates),
-                      F.col(domain_col).eqNullSafe(F.col("_dr_d")))
-                .drop("_dr_d"))
-    thr = F.floor(F.col("_dr_rate") * F.lit(float(BUCKETS))
-                  + F.lit(1e-9))
-    out = joined.where(hash_bucket(key_col) < thr)
-    if rate_alias:
-        return out.withColumnRenamed("_dr_rate", rate_alias)
-    return out.drop("_dr_rate")
+    rates = df.sparkSession.createDataFrame(
+        rows, f"domain {dtype}, rate double")
+    return accept_at_rates(df, domain_col, key_col, rates, rate_alias)

@@ -31,13 +31,20 @@ from ..kernel.processor import PiiProcessor, SrcDocument
 from ..kernel.scrub import scrub_text
 from ..registry.factory import make_processor
 
-# entity fields exposed in the exploded Spark schema (FIXTURES.md §3.1)
-ENTITY_FIELDS = ("type", "subtype", "value", "start", "end", "lang",
-                 "country", "detector", "method", "stage")
 
-ENTITY_STRUCT = ("struct<type:string,subtype:string,value:string,"
-                 "start:long,end:long,lang:string,country:string,"
-                 "detector:int,method:string,stage:string>")
+def _struct(fields) -> str:
+    """The Spark DDL struct type of (name, type) pairs."""
+    return "struct<" + ",".join(f"{n}:{t}" for n, t in fields) + ">"
+
+
+# entity fields exposed in the exploded Spark schema (FIXTURES.md §3.1)
+ENTITY_FIELDS = (
+    ("type", "string"), ("subtype", "string"), ("value", "string"),
+    ("start", "long"), ("end", "long"), ("lang", "string"),
+    ("country", "string"), ("detector", "int"), ("method", "string"),
+    ("stage", "string"))
+
+ENTITY_STRUCT = _struct(ENTITY_FIELDS)
 
 _PROC_CACHE: Dict[tuple, PiiProcessor] = {}
 
@@ -135,13 +142,11 @@ def page_result(proc: PiiProcessor, text: str, lang: str,
     }
 
 
-# detect_chunked's entity struct; a document's entities are sorted by
-# these fields in this order, NULLs first
-DOC_ENTITY_FIELDS = (
-    ("chunk", "int"), ("start", "long"), ("end", "long"),
-    ("type", "string"), ("subtype", "string"), ("value", "string"),
-    ("lang", "string"), ("country", "string"), ("detector", "int"),
-    ("method", "string"), ("stage", "string"))
+# detect_chunked's entity struct: the chunk index, the span, then the
+# other ENTITY_FIELDS; a document's entities are sorted by these fields
+# in this order, NULLs first
+DOC_ENTITY_FIELDS = (("chunk", "int"),) + tuple(
+    sorted(ENTITY_FIELDS, key=lambda f: f[0] not in ("start", "end")))
 
 
 def document_result(proc: PiiProcessor, chunks, lang: str,
@@ -176,8 +181,7 @@ def document_result(proc: PiiProcessor, chunks, lang: str,
     }
 
 
-RULES_STRUCT = ("struct<" + ",".join(f"{n}:boolean" for n in RULE_NAMES)
-                + ">")
+RULES_STRUCT = _struct((n, "boolean") for n in RULE_NAMES)
 
 # page_result's fields, in the pipeline's output column order
 FUSED_FIELDS = (
@@ -187,8 +191,7 @@ FUSED_FIELDS = (
     ("scrubbed_text", "string"), ("keep", "boolean"),
     ("reasons", "array<string>"))
 
-FUSED_RESULT_SCHEMA = ("struct<" + ",".join(f"{n}:{t}" for n, t in
-                                            FUSED_FIELDS) + ">")
+FUSED_RESULT_SCHEMA = _struct(FUSED_FIELDS)
 
 
 def make_fused_udf(languages: Tuple[str, ...],
@@ -223,10 +226,13 @@ def make_fused_udf(languages: Tuple[str, ...],
     return fused_udf
 
 
-DOCUMENT_RESULT_SCHEMA = (
-    "struct<n_chunks:long,n_entities:long,scrubbed_chunks:array<string>,"
-    "entities:array<struct<" + ",".join(f"{n}:{t}" for n, t in
-                                        DOC_ENTITY_FIELDS) + ">>>")
+# document_result's fields, in detect_chunked's output column order
+DOCUMENT_FIELDS = (
+    ("n_chunks", "long"), ("n_entities", "long"),
+    ("scrubbed_chunks", "array<string>"),
+    ("entities", f"array<{_struct(DOC_ENTITY_FIELDS)}>"))
+
+DOCUMENT_RESULT_SCHEMA = _struct(DOCUMENT_FIELDS)
 
 
 def detect_chunked(df, languages: Tuple[str, ...],
@@ -259,8 +265,7 @@ def detect_chunked(df, languages: Tuple[str, ...],
         return pd.DataFrame(
             [document_result(proc, c, lg, d) for c, lg, d in zip(
                 chunks.tolist(), lang.tolist(), docid.tolist())],
-            columns=["n_chunks", "n_entities", "scrubbed_chunks",
-                     "entities"])
+            columns=[n for n, _ in DOCUMENT_FIELDS])
 
     return (df.withColumn("_doc", document_udf(
                 F.col(chunks_col), F.col(lang_col),

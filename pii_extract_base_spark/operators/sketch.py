@@ -137,8 +137,8 @@ def histogram_quantiles(df: DataFrame, col: str, qs, bins: int = 4096):
     """Approximate quantiles from a fixed-bin histogram between the
     column's min and max — rank error ≤ one bin's mass, deterministic,
     and bit-replayable (both engines evaluate the identical IEEE bin
-    expression; see functions/sampling.quantile_cut_scalable for the
-    same device used for selection instead of readout). Returns one
+    expression, `functions/sampling.score_bin`, which
+    quantile_cut_scalable uses for selection instead). Returns one
     row with columns p<q> = the cutoff bin's UPPER EDGE (the smallest
     bin boundary whose cumulative count reaches ceil(q·n)).
 
@@ -147,18 +147,13 @@ def histogram_quantiles(df: DataFrame, col: str, qs, bins: int = 4096):
     data itself (Spark's exact `percentile` sorts every group;
     approx_percentile's GK sketch is not cross-engine)."""
     from pyspark.sql import Window
+    from ..functions.sampling import score_bin
     sc = F.col(col).cast("double")
     base = df.where(sc.isNotNull())
     ext = base.agg(F.count("*").alias("_n"), F.min(sc).alias("_mn"),
                    F.max(sc).alias("_mx"))
     NB = float(bins)
-    binc = F.when(
-        F.col("_mx") > F.col("_mn"),
-        F.least(F.lit(bins - 1),
-                F.floor((sc - F.col("_mn"))
-                        * (F.lit(NB) / (F.col("_mx") - F.col("_mn"))))
-                 .cast("long"))
-    ).otherwise(F.lit(0))
+    binc = score_bin(sc, F.col("_mn"), F.col("_mx"), bins)
     hist = (base.crossJoin(F.broadcast(ext))
                 .groupBy(binc.alias("_bin"))
                 .agg(F.count("*").alias("_c"),

@@ -240,9 +240,11 @@ def main() -> int:
             pages, lambda df: pipe(df).drop("rules"),
             input_fingerprint=registry_fingerprint(langs),
             wave_size=args.wave_size)
-        scored_src = sink.read(spark)
+        summary = _manifest_summary(sink.manifest_entries())
         extra = {"partitions_committed_this_run": committed,
                  "partitions_total": len(sink.committed_partitions())}
+        if args.pack:
+            scored_src = sink.read(spark)
     else:
         out = pipe(pages)
         if args.output or args.pack:
@@ -252,14 +254,20 @@ def main() -> int:
             out = out.localCheckpoint(eager=False)
         scored_src = out
         if args.output:
+            # the summary is observed on the pages_scored write itself;
+            # the packer reads the committed parquet
+            from pyspark.sql import Observation, functions as F
+            obs = Observation()
             (out.drop("rules", "entities")
+                .observe(obs, *map(F.expr, SUMMARY_AGGS))
                 .write.mode("overwrite")
                 .parquet(f"{args.output}/pages_scored"))
+            summary = obs.get
             explode_entities(out).write.mode("overwrite") \
                 .parquet(f"{args.output}/entities")
-            # summarize and pack from the committed parquet
             scored_src = spark.read.parquet(f"{args.output}/pages_scored")
-    summary = _summary(scored_src)
+        else:
+            summary = out.selectExpr(*SUMMARY_AGGS).first().asDict()
     if args.pack:
         extra.update(_pack_stats(spark, scored_src, args.pack,
                                  args.output))
@@ -294,14 +302,21 @@ def _split_fracs(spec):
     return fracs
 
 
-def _summary(scored):
-    """{docs, kept, entities} of a pipeline output table in ONE
-    aggregate: the entity count is sum(n_entities), so no entities
-    table is re-read."""
-    return scored.selectExpr(
-        "count(*) as docs",
-        "coalesce(sum(cast(keep as int)), 0) as kept",
-        "coalesce(sum(n_entities), 0L) as entities").collect()[0].asDict()
+#: the summary's {docs, kept, entities} of a pipeline output as ONE
+#: aggregate: the entity count is sum(n_entities), so no entities
+#: table is read
+SUMMARY_AGGS = ("count(*) as docs",
+                "coalesce(sum(cast(keep as int)), 0) as kept",
+                "coalesce(sum(n_entities), 0L) as entities")
+
+
+def _manifest_summary(entries):
+    """The same {docs, kept, entities} of a checkpointed table, summed
+    from its manifest's per-partition counts, so the table is not
+    scanned."""
+    return {"docs": sum(e["rows_in"] for e in entries),
+            "kept": sum(e["rows_kept"] for e in entries),
+            "entities": sum(sum(e["entities"].values()) for e in entries)}
 
 
 def _pack_stats(spark, scored, seq_len, writer_dir=None):

@@ -2,8 +2,9 @@
 engine, as the other five do. The swap keeps every match: over a seeded
 fuzz corpus each pattern finds the same (start, value) list as the same
 text compiled with stdlib ``re``, apart from the Unicode classing the
-detectors' docstring names. Each detector is linear in page length on
-its own adversarial family."""
+detectors' docstring names. Each detector, the phone, BTC, IPv4 and
+toxic wordlist patterns too, is linear in page length on its own
+adversarial family."""
 
 import random
 import re
@@ -11,7 +12,7 @@ import time
 
 import pytest
 
-from pii_extract_base_spark.kernel.task import DocumentChunk
+from pii_extract_base_spark.kernel.task import DocumentChunk, RegexPiiTask
 from pii_extract_base_spark.registry import detectors as D
 
 CC = D.CreditCardDetector(pii={"type": "CREDIT_CARD", "lang": "any"})
@@ -152,6 +153,12 @@ def _cpu_s(fn, text, repeat=3):
     return best
 
 
+def _regex_task(pattern, pii_type):
+    """A pattern's matches as ``RegexPiiTask`` finds them."""
+    task = RegexPiiTask(pattern, pii={"type": pii_type, "lang": "any"})
+    return lambda t: list(task.find(DocumentChunk(0, t)))
+
+
 FAMILIES = [
     ("cc", _cc_values, lambda n: "7" * n),
     ("tfn", lambda t: list(D.tax_file_number(t)),
@@ -160,6 +167,16 @@ FAMILIES = [
      lambda n: "123 " * (n // 4)),
     ("iban", lambda t: list(D.iban_detector(t)),
      lambda n: "XX00" + "AB12CD" * (n // 6)),
+    # each unit is a near-match that fails at its last \b, after the
+    # pattern's repeats have backtracked through every split
+    ("phone", _regex_task(D.PATTERN_INT_PHONE, "PHONE_NUMBER"),
+     lambda n: " +44 12 34 56x" * (n // 14)),
+    ("btc", _regex_task(D.PATTERN_BTC, "BLOCKCHAIN_ADDRESS"),
+     lambda n: ("1" + "a" * 39 + " ") * (n // 41)),
+    ("ipv4", _regex_task(D.PATTERN_IPV4, "IP_ADDRESS"),
+     lambda n: "255.255.255.2555 " * (n // 17)),
+    ("toxic", _regex_task(D.PATTERN_TOXIC, "TOXIC"),
+     lambda n: "badword1x " * (n // 10)),
 ]
 
 

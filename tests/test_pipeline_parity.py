@@ -3,7 +3,8 @@ byte-identical scrubbed text per url, identical entity dicts, identical
 keep/drop (F1 must be 1.0 — shared row function), rule vector equality
 between the native-Spark SQL rendering (off the pipeline path) and the
 pure-Python one, and pipeline-vs-oracle parity on whitespace the two
-renderings treat differently and on NULL languages.
+renderings treat differently, on NULL languages, on a language outside
+the pipeline's set and on a digits-only page.
 """
 
 import math
@@ -95,16 +96,22 @@ WHITESPACE_CASES = {
 }
 
 
-@pytest.fixture(scope="module")
-def whitespace_results(spark):
+def _pipeline_rows(spark, host, cases):
+    """{name: pipeline row} of the pages {name: (text, lang)}."""
     import datetime
     ts = datetime.datetime(2024, 1, 1)
     pages = spark.createDataFrame(
-        [(f"https://ws.example/{name}", ts, text, "en")
-         for name, text in WHITESPACE_CASES.items()],
+        [(f"https://{host}/{name}", ts, text, lang)
+         for name, (text, lang) in cases.items()],
         "url string, warc_ts timestamp, text string, lang string")
     return {r.url.rsplit("/", 1)[1]: r
             for r in QualityPipeline(DEFAULT_LANGUAGES)(pages).collect()}
+
+
+@pytest.fixture(scope="module")
+def whitespace_results(spark):
+    return _pipeline_rows(spark, "ws.example", {
+        name: (text, "en") for name, text in WHITESPACE_CASES.items()})
 
 
 @pytest.mark.parametrize("case", sorted(WHITESPACE_CASES))
@@ -115,6 +122,34 @@ def test_whitespace_pages_match_oracle(whitespace_results, case):
     assert row.rules.asDict() == exp["rules"]
     assert row.keep == exp["keep"]
     assert list(row.reasons) == exp["reasons"]
+    assert row.scrubbed_text == exp["scrubbed_text"]
+
+
+# (text, lang) pages the synthetic corpus never holds: a row language
+# outside the pipeline's languages (its PII is not detected, as in the
+# oracle) and a page of digits with no whitespace at all
+EDGE_CASES = {
+    "lang_outside_set": (
+        "la gente della città è andata al mercato e ha comprato il pane "
+        "con i soldi risparmiati per la settimana. scrivi a "
+        "mario.rossi@example.com o 4111 1111 1111 1111", "it"),
+    "digits_no_whitespace": ("0123456789" * 300, "en"),
+}
+
+
+@pytest.fixture(scope="module")
+def edge_results(spark):
+    return _pipeline_rows(spark, "edge.example", EDGE_CASES)
+
+
+@pytest.mark.parametrize("case", sorted(EDGE_CASES))
+def test_edge_pages_match_oracle(edge_results, case):
+    row = edge_results[case]
+    text, lang = EDGE_CASES[case]
+    exp = oracle_page(text, lang, row.url, DEFAULT_LANGUAGES)
+    assert row.keep == exp["keep"]
+    assert list(row.reasons) == exp["reasons"]
+    assert row.n_entities == exp["n_entities"]
     assert row.scrubbed_text == exp["scrubbed_text"]
 
 

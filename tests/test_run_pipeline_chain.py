@@ -147,6 +147,58 @@ def test_checkpoint_summary_counts_entities(spark, monkeypatch, tmp_path):
     assert summary["entities"] == agg.e > 0
 
 
+def _table_summary(df):
+    return df.selectExpr("count(*) as docs",
+                         "sum(cast(keep as int)) as kept",
+                         "sum(n_entities) as entities").first().asDict()
+
+
+def test_output_summary_is_observed_on_the_write(spark, monkeypatch,
+                                                 tmp_path):
+    """--output reads its summary off the pages_scored write: no
+    execution reads pages_scored back, and the summary equals that
+    table's aggregate."""
+    out = tmp_path / "out"
+    summary, scans = _runs_of(spark, monkeypatch, [
+        "run_pipeline", "--sf-dir", SF_DIR, "--limit", "120",
+        "--output", str(out)],
+        needle=f"InMemoryFileIndex [file:{out}/pages_scored]")
+    assert scans == []
+    want = _table_summary(spark.read.parquet(f"{out}/pages_scored"))
+    assert {k: summary[k] for k in want} == want
+    assert want["docs"] == 120 and want["entities"] > 0
+
+
+def test_checkpoint_summary_is_the_manifest_total(spark, monkeypatch,
+                                                  tmp_path):
+    """--checkpoint sums its summary from the manifest: no execution
+    scans the committed table, and the summary equals the table's
+    aggregate, also after a resume that commits only the partitions a
+    crashed run left uncommitted."""
+    from pii_extract_base_spark.sinks.checkpoint import CheckpointedSink
+    tbl = tmp_path / "tbl"
+    argv = ["run_pipeline", "--sf-dir", SF_DIR, "--limit", "120",
+            "--checkpoint", str(tbl), "--partitions", "4",
+            "--wave-size", "1"]
+    needle = f"InMemoryFileIndex [file:{tbl}/part_id="
+    sink = CheckpointedSink(str(tbl), n_partitions=4)
+    summary, scans = _runs_of(spark, monkeypatch, argv, needle=needle)
+    assert scans == []
+    want = _table_summary(sink.read(spark))
+    assert {k: summary[k] for k in want} == want
+    assert want["docs"] == 120 and want["entities"] > 0
+
+    # a crash after two commits: the manifest keeps its first 2 lines
+    manifest = tbl / "_manifest.jsonl"
+    lines = manifest.read_text().splitlines(keepends=True)
+    manifest.write_text("".join(lines[:2]))
+    resumed, scans = _runs_of(spark, monkeypatch, argv, needle=needle)
+    assert scans == []
+    assert resumed["partitions_committed_this_run"] == 2
+    assert {k: resumed[k] for k in want} == _table_summary(
+        sink.read(spark)) == want
+
+
 def test_pack_runs_pipeline_once(spark, monkeypatch):
     """--pack without --output: the summary aggregate and the packer
     read ONE run of the pipeline's Arrow UDF."""
