@@ -1949,15 +1949,10 @@ def _chunked_docs(spark, sf_dir):
     """documents split into fixed 8-word chunks — the deterministic
     multi-chunk corpus q77/q78 run over (both engines derive the SAME
     chunks from the same parquet words)."""
-    from pii_extract_base_spark.functions.textstats import words_col
+    from pii_extract_base_spark.functions.textstats import (word_chunks,
+                                                            words_col)
     docs = _t(spark, sf_dir, "documents")
-    words = words_col("text")
-    n = F.size(words)
-    W = _CHUNK_WORDS
-    chunks = F.when(n > 0, F.transform(
-        F.sequence(F.lit(0), F.ceil(n / F.lit(W)).cast("int") - 1),
-        lambda i: F.array_join(F.slice(words, i * W + 1, W), " ")
-    )).otherwise(F.array().cast("array<string>"))
+    chunks = word_chunks(words_col("text"), _CHUNK_WORDS)
     return docs.select("doc_id", "lang", chunks.alias("chunks"))
 
 

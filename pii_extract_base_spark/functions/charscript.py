@@ -80,9 +80,7 @@ def _chars(text_col):
     # split on the empty pattern = per-character array in ONE linear
     # pass ('' and NULL both yield []).  NOT transform(sequence) +
     # substr(i, 1): substr seeks from the string head each call, so a
-    # per-index lambda is O(len²) character scans per document (see
-    # functions/textstats._joined_windows for the measured instance
-    # of this HOF-lambda hazard class).
+    # per-index lambda is O(len²) character scans per document.
     s = F.coalesce(F.col(text_col), F.lit(""))
     return F.split(s, "")
 

@@ -55,7 +55,7 @@ decimals.
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .textstats import words_col
+from .textstats import word_windows, words_col
 from .ppl_sql import EMPTY_PPL
 
 ADD_K = 0.5  # exactly representable in binary — both engines agree
@@ -66,27 +66,11 @@ def _toks(text_col: str) -> Column:
 
 
 def _bigrams(text_col: str) -> Column:
-    """Adjacent lowercased word pairs as 'w1 w2' structs; empty for
-    docs with < 2 words.
-
-    Shape matters: zip_with over two slices, NOT
-    ``transform(sequence(...), i -> element_at(a, i+1)...)``.  In a
-    higher-order-function lambda the token-array expression ``a`` is
-    re-evaluated at EVERY index access (lambda bodies see the raw
-    expression — no common-subexpression elimination across lambda
-    iterations), so the element_at form re-tokenizes the document once
-    per word: O(words²) per doc.  Measured on the 3.2M-doc rehearsal:
-    the element_at form burned 8,500 executor-CPU-seconds on a stage
-    the zip_with form finishes in ~100; slices are HOF *inputs*,
-    evaluated once per row, and the lambda touches only its bound
-    variables."""
-    a = _toks(text_col)
-    n = F.size(a)
-    return F.when(
-        n >= 2,
-        F.zip_with(F.slice(a, 1, n - 1), F.slice(a, 2, n - 1),
-                   lambda x, y: F.struct(x.alias("w1"), y.alias("w2")))
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+    """Adjacent lowercased word pairs as (w1, w2) structs; empty for
+    docs with < 2 words."""
+    return word_windows(_toks(text_col), 2,
+                        lambda x, y: F.struct(x.alias("w1"),
+                                              y.alias("w2")))
 
 
 def bigram_lm_fit(train: DataFrame, text_col: str = "text"):

@@ -104,7 +104,8 @@ def _top_quota(base: DataFrame, group_col: str, quota: Column,
     cut = (cum.where(F.col("_cum") >= F.col("_q"))
               .groupBy(group_col).agg(F.min("_bin").alias("_cutbin"))
               .withColumnRenamed(group_col, "_g"))
-    rem = (cum.join(cut, F.col(group_col).eqNullSafe(F.col("_g"))
+    rem = (cum.join(F.broadcast(cut),
+                    F.col(group_col).eqNullSafe(F.col("_g"))
                     & (F.col("_bin") == F.col("_cutbin")))
               .select("_g", "_cutbin",
                       (F.col("_q") - (F.col("_cum") - F.col("_c")))

@@ -35,32 +35,55 @@ def fingerprint(text_col: str = "text") -> Column:
     return F.md5(F.coalesce(F.col(text_col), F.lit("")))
 
 
-def _joined_windows(w: Column, n: Column, k: int) -> Column:
-    """All k-word windows of ``w`` as space-joined strings, built as a
-    chain of k-1 LINEAR zip_withs over shifted slices.  NOT
-    ``transform(sequence(...), i -> slice(w, i+1, k))``: an HOF lambda
-    re-evaluates the word-array expression at every index access (no
-    cross-iteration CSE), making that form O(words²) per document —
-    measured at 8,500 executor-CPU-s on one 3.2M-doc stage before the
-    same fix in functions/lmtrain.  Slices are HOF inputs, evaluated
-    once per row; ``w`` is referenced k+1 times total (a constant),
-    not once per window."""
-    m = n - (k - 1)
-    acc = F.slice(w, 1, m)
+def _join(x: Column, y: Column) -> Column:
+    return F.concat(x, F.lit(" "), y)
+
+
+def word_windows(words: Column, k: int, combine=_join) -> Column:
+    """Every full k-window of the array column ``words``, in order:
+    ``combine`` folded left to right over each window's elements
+    (default: the space-joined string). A row shorter than ``k``, an
+    empty array and the words of a NULL text yield an empty array of
+    the result's element type, so callers need no size guard.
+
+    This module is the only place a word window is built, because the
+    shape decides the cost. A higher-order-function lambda re-evaluates
+    any row-level expression it references at every call (no common-
+    subexpression elimination across lambda iterations), so
+    ``transform(sequence(...), i -> slice(words, i+1, k))`` re-tokenizes
+    the document once per window: O(words²) per document, measured at
+    8,500 executor-CPU-s on one 3.2M-doc stage. Here the k shifted
+    slices are HOF *inputs*, evaluated once per row, and the k-1
+    zip_withs touch only their bound elements: O(k·words)."""
+    m = F.greatest(F.size(words) - (k - 1), F.lit(0))
+    acc = F.slice(words, 1, m)
     for j in range(2, k + 1):
-        acc = F.zip_with(acc, F.slice(w, j, m),
-                         lambda x, y: F.concat(x, F.lit(" "), y))
+        acc = F.zip_with(acc, F.slice(words, j, m), combine)
     return acc
+
+
+def word_chunks(words: Column, k: int) -> Column:
+    """The non-overlapping k-word grid of ``words`` as space-joined
+    strings, the last chunk shorter when the length is not a multiple
+    of ``k``; empty for an empty array. The grid needs a per-index
+    lambda, so the array is first bound to a lambda variable
+    (``transform(array(words), t -> ...)[0]``): the inner lambda slices
+    ``t``, O(k) per chunk, never re-evaluating ``words`` (see
+    `word_windows`)."""
+    def grid(t):
+        n = F.size(t)
+        # sequence(0, n, k) is never empty; the slice keeps ceil(n/k)
+        # chunk starts, none for n = 0
+        starts = F.slice(F.sequence(F.lit(0), n, F.lit(k)), 1,
+                         F.ceil(n / F.lit(k)).cast("int"))
+        return F.transform(
+            starts, lambda s: F.array_join(F.slice(t, s + 1, k), " "))
+    return F.transform(F.array(words), grid)[0]
 
 
 def shingles(text_col: str = "text", k: int = 5) -> Column:
     """Distinct k-word shingles of the text (the MinHash input set)."""
-    w = words_col(text_col)
-    n = F.size(w)
-    return F.when(
-        n >= k,
-        F.array_distinct(_joined_windows(w, n, k))
-    ).otherwise(F.array().cast("array<string>"))
+    return F.array_distinct(word_windows(words_col(text_col), k))
 
 
 def shingle_count(text_col: str = "text", k: int = 5) -> Column:
@@ -72,12 +95,7 @@ def ngrams(text_col: str = "text", n: int = 2) -> Column:
     `shingles`, which is the distinct set) — the input to repetition
     signals, where multiplicity is the whole point (Gopher's
     duplicate-n-gram fractions)."""
-    w = words_col(text_col)
-    sz = F.size(w)
-    return F.when(
-        sz >= n,
-        _joined_windows(w, sz, n)
-    ).otherwise(F.array().cast("array<string>"))
+    return word_windows(words_col(text_col), n)
 
 
 def rolling_fingerprint(text_col: str = "text",
@@ -107,8 +125,7 @@ def rolling_fingerprint(text_col: str = "text",
     # the previous transform(sequence)+substring(piece, i, 1) form
     # seeks from the string head per index — O(chunk²) per chunk,
     # i.e. ~chunk/2 extra character scans PER CHARACTER of the
-    # document (the HOF-lambda hazard class documented at
-    # _joined_windows; a 1 MB page paid ~2×10⁹ char ops)
+    # document (a 1 MB page paid ~2×10⁹ char ops)
     h = F.aggregate(
         pieces, F.lit(0).cast("long"),
         lambda acc, piece: F.aggregate(

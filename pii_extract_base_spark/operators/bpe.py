@@ -36,7 +36,7 @@ from typing import List, Tuple
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..functions.textstats import words_col
+from ..functions.textstats import word_windows, words_col
 
 
 def _sym_col(word: Column) -> Column:
@@ -46,20 +46,8 @@ def _sym_col(word: Column) -> Column:
 
 
 def _pair_col(sym: Column) -> Column:
-    """All adjacent symbol pairs ('a b'), multiplicity kept.
-
-    zip_with over two slices, not transform(sequence)+element_at: in
-    an HOF lambda the split expression would be re-evaluated at every
-    index access — O(symbols²) per word, a real hazard once "words"
-    are URL-length (see functions/lmtrain._bigrams for the measured
-    case). Slices are HOF inputs, evaluated once per row."""
-    a = F.split(F.trim(sym), " ")
-    sz = F.size(a)
-    return F.when(
-        sz >= 2,
-        F.zip_with(F.slice(a, 1, sz - 1), F.slice(a, 2, sz - 1),
-                   lambda x, y: F.concat(x, F.lit(" "), y))
-    ).otherwise(F.array().cast("array<string>"))
+    """All adjacent symbol pairs ('a b'), multiplicity kept."""
+    return word_windows(F.split(F.trim(sym), " "), 2)
 
 
 def bpe_train(df: DataFrame, text_col: str = "text",

@@ -514,22 +514,13 @@ def span_dedup(df: DataFrame, text_col: str = "text",
     matters because only rank 1 survives, a WindowGroupLimit pushdown).
     """
     from pyspark.sql import Window
-    from ..functions.textstats import words_col
+    from ..functions.textstats import word_chunks, words_col
 
     toks = words_col(text_col)
     n_chunks = F.ceil(F.size(toks) / F.lit(span)).cast("int")
-    # guard: F.sequence(0, -1) yields [0, -1], not [] — empty docs must
-    # produce zero chunk rows
-    idx = F.when(n_chunks > 0, F.sequence(F.lit(0), n_chunks - 1)) \
-           .otherwise(F.array().cast("array<int>"))
     chunks = df.select(
         F.col(id_col),
-        F.posexplode(
-            F.transform(
-                idx,
-                lambda i: F.array_join(
-                    F.slice(toks, i * span + 1, span), " "))
-        ).alias("pos", "chunk"))
+        F.posexplode(word_chunks(toks, span)).alias("pos", "chunk"))
     w = Window.partitionBy("chunk").orderBy(id_col, "pos")
     kept = (chunks.withColumn("rn", F.row_number().over(w))
                   .where(F.col("rn") == 1))
@@ -647,8 +638,10 @@ def sliding_span_dedup(df: DataFrame, text_col: str = "text",
     occurrence keeps its words.  Documents survive with the remaining
     words re-joined in order.
 
-    Plan at scale (suffix arrays need not apply):
-      1. one explode: ~n_tokens sliding-window rows per corpus pass;
+    Plan at scale (suffix arrays need not apply), every step linear
+    in document length:
+      1. one explode: ~n_tokens sliding-window rows per corpus pass,
+         built by `functions/textstats.word_windows`;
       2. ONE shuffle on the window text for the keep-first rank
          (WindowGroupLimit — only rank decisions, never pairs: a
          boilerplate banner duplicated in 10^9 documents is one hash
@@ -658,7 +651,7 @@ def sliding_span_dedup(df: DataFrame, text_col: str = "text",
          mass, not the corpus;
       4. LINEAR rebuild: tokens explode to (doc, pos) rows, removed
          positions hash-anti-join away, survivors re-aggregate per
-         doc — every step O(words), no per-token membership scan
+         doc — no per-token membership scan
          (a per-doc array_contains filter would be O(words×removed):
          quadratic on exactly the book-length documents this operator
          exists for).
@@ -669,21 +662,13 @@ def sliding_span_dedup(df: DataFrame, text_col: str = "text",
     and SQL-replayable end to end — the q79 DuckDB oracle replays the
     identical keep-first rule."""
     from pyspark.sql import Window
-    from ..functions.textstats import words_col
+    from ..functions.textstats import ngrams, words_col
 
     toks = words_col(text_col)
     n_words = F.size(toks)
-    n_win = n_words - F.lit(window - 1)
-    idx = F.when(n_win > 0, F.sequence(F.lit(0), n_win - 1)) \
-           .otherwise(F.array().cast("array<int>"))
     wins = df.select(
         F.col(id_col),
-        F.posexplode(
-            F.transform(
-                idx,
-                lambda i: F.array_join(
-                    F.slice(toks, i + 1, window), " "))
-        ).alias("pos", "win"))
+        F.posexplode(ngrams(text_col, window)).alias("pos", "win"))
     w = Window.partitionBy("win").orderBy(id_col, "pos")
     dups = (wins.withColumn("rn", F.row_number().over(w))
                 .where(F.col("rn") > 1))

@@ -127,13 +127,19 @@ def test_whitespace_pages_match_oracle(whitespace_results, case):
 
 # (text, lang) pages the synthetic corpus never holds: a row language
 # outside the pipeline's languages (its PII is not detected, as in the
-# oracle) and a page of digits with no whitespace at all
+# oracle), a page of digits with no whitespace at all, and a ~1 MB page
+# with no newline and an email and a card number every ~190 bytes
 EDGE_CASES = {
     "lang_outside_set": (
         "la gente della città è andata al mercato e ha comprato il pane "
         "con i soldi risparmiati per la settimana. scrivi a "
         "mario.rossi@example.com o 4111 1111 1111 1111", "it"),
     "digits_no_whitespace": ("0123456789" * 300, "en"),
+    "one_mb_no_newline": ("".join(
+        f"the people of the town went to the market and bought some "
+        f"bread with the money that they had saved, mail "
+        f"anna.berg{i}@example.com or pay by card 4111 1111 1111 1111 "
+        f"before the week ends. " for i in range(5_400)), "en"),
 }
 
 
