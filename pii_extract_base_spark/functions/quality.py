@@ -4,7 +4,12 @@ The rule DEFINITIONS live here once, with three renderings:
 
  - `rules_python(text, lang)`  — pure-Python kernel: the pipeline's
    one Arrow UDF and the oracle both run it through
-   operators/detect.page_result
+   operators/detect.page_result. Its per-word rules (the mean word
+   length, the alpha test and the lowercase stopword set) are
+   evaluated once per DISTINCT word of ``Counter(words)``, the length
+   and alpha sums weighting each word by its count: the same integers
+   as a per-token pass, at the cost of the vocabulary rather than the
+   page
  - `rules_columns()`           — native Spark SQL Column expressions,
    off the pipeline path (q11, perfbench); agrees with `rules_python`
    on ASCII-whitespace text (tests/test_pipeline_parity.py)
@@ -14,6 +19,7 @@ Thresholds follow Gopher (Rae et al. 2021, arXiv:2112.11446) and C4
 (Raffel et al. 2020) adapted to the synthetic corpus scale.
 """
 
+from collections import Counter
 from typing import Dict
 
 from .langdata import STOPWORDS
@@ -49,7 +55,9 @@ def rules_python(text: str, lang: str) -> Dict[str, bool]:
     text = text or ""
     words = text.split()
     wc = len(words)
-    mean_wl = (sum(map(len, words)) / wc) if wc else 0.0
+    counts = Counter(words)
+    mean_wl = (sum(len(w) * c for w, c in counts.items()) / wc
+               if wc else 0.0)
     n_chars = len(text)
     symbol_frac = (sum(text.count(c) for c in SYMBOL_CHARS) / n_chars
                    if n_chars else 0.0)
@@ -58,15 +66,14 @@ def rules_python(text: str, lang: str) -> Dict[str, bool]:
     bullet_frac = sum(
         1 for l in lines if l.lstrip()[:1] in _BULLETS) / n_lines
     ellipsis_frac = sum(
-        1 for l in lines
-        if l.rstrip().endswith("...") or l.rstrip().endswith("…")) / n_lines
-    nonempty = [l for l in lines if l.strip()]
+        1 for l in lines if l.rstrip().endswith(("...", "…"))) / n_lines
+    nonempty = list(filter(str.strip, lines))
     dup_frac = (1.0 - len(set(nonempty)) / len(nonempty)) if nonempty else 0.0
     # w.isalpha() answers most words in C; the any() only sees the rest
-    alpha_frac = (sum(1 for w in words
+    alpha_frac = (sum(c for w, c in counts.items()
                       if w.isalpha() or any(map(str.isalpha, w))) / wc
                   if wc else 0.0)
-    wl = set(map(str.lower, words))
+    wl = set(map(str.lower, counts))
     stop_hits = sum(1 for s in _stopwords_for(lang) if s in wl)
 
     return {

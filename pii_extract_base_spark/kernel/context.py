@@ -2,9 +2,23 @@
 
 Parity: reference helper/context.py:15-132 — same spec grammar
 (string / word / regex), same default width (64), same
-whitespace-normalize-then-slice window construction, proven against the
-reference truth table (test/unit/A_helper/test_context.py:9-97) in
+whitespace-normalize-then-slice window, proven against the reference
+truth table (test/unit/A_helper/test_context.py:9-97) in
 tests/test_kernel_context.py.
+
+The window is built from a bounded slice of the text, not the whole of
+it. Whitespace normalization is ``" ".join(s.split())``, so for any
+split of a string into ``a + b``, ``normalize(b)`` is a suffix of
+``normalize(a + b)`` and ``normalize(a)`` a prefix: a token cut by the
+split keeps its tail in ``b`` (its head in ``a``), and whitespace at a
+slice edge is dropped, as it is at the edge of the whole string. So the
+last ``width`` characters of ``normalize(text[p-k:p])`` are those of
+``normalize(text[:p])`` once the slice's normalized length reaches
+``width`` or ``p-k`` reaches 0 (and the first ``width`` of
+``normalize(text[p:p+k])`` likewise); `context_window` doubles ``k``
+until that holds. A candidate costs O(width) plus the whitespace runs
+its window spans, not O(page length) (tests/test_page_kernels.py
+checks the window against the whole-text one).
 
 Provenance: this module deliberately TRANSCRIBES the reference's
 context semantics (piisa/pii-extract-base, Apache-2.0) — byte-identical
@@ -99,33 +113,53 @@ def context_spec(spec: Union[str, List, Dict], lang: str = LANG_ANY) -> Dict:
     return out
 
 
-def context_check(text: str, spec: Dict,
-                  pii_pos: Union[int, Tuple[int, int], List[int]]) -> bool:
-    """Search the context window around a PII position for any spec value.
+def _window(text: str, start: int, stop: int, width: int,
+            left: bool) -> str:
+    """The ``width``-character window of ``normalize(text[start:stop],
+    whitespace=True)`` at the ``stop`` end (``left``) or the ``start``
+    end, normalizing only a bounded slice (see the module docstring).
+    A width below 1 normalizes the whole range."""
+    k = 2 * width if width > 0 else len(text)
+    while True:
+        lo = max(stop - k, start) if left else start
+        hi = stop if left else min(start + k, stop)
+        src = normalize(text[lo:hi], whitespace=True)
+        if len(src) >= width or (lo == start and hi == stop):
+            break
+        k *= 2
+    return src[max(len(src) - width, 0):] if left else src[:width]
 
-    Window = last ``width[0]`` chars of the whitespace-normalized text left
-    of the span + " " + first ``width[1]`` chars right of it
-    (reference helper/context.py:98-132).
-    """
-    width = spec["width"]
+
+def context_window(text: str, width: Tuple[int, int],
+                   pii_pos: Union[int, Tuple[int, int], List[int]]) -> str:
+    """The context window around a PII position: the last ``width[0]``
+    chars of the whitespace-normalized text left of the span + " " +
+    the first ``width[1]`` chars right of it (reference
+    helper/context.py:98-132)."""
     if isinstance(pii_pos, int):
         pii_pos = (pii_pos, pii_pos)
     elif len(pii_pos) == 1:
         pii_pos = [pii_pos[0], pii_pos[0]]
 
+    n = len(text)
+    src = ""
     if width[0]:
-        src1 = normalize(text[:pii_pos[0]], whitespace=True)
-        start = max(len(src1) - width[0], 0)
-        src = src1[start:]
-    else:
-        src = ""
-
+        # text[:p] and text[p:] as Python slices them, for any int p
+        src = _window(text, 0, slice(pii_pos[0]).indices(n)[1], width[0],
+                      True)
     if width[1]:
-        src2 = normalize(text[pii_pos[1]:], whitespace=True)
         if src:
             src += " "
-        src += src2[:width[1]]
+        src += _window(text, slice(pii_pos[1], None).indices(n)[0], n,
+                       width[1], False)
+    return src
 
+
+def context_check(text: str, spec: Dict,
+                  pii_pos: Union[int, Tuple[int, int], List[int]]) -> bool:
+    """Search the `context_window` around a PII position for any spec
+    value."""
+    src = context_window(text, spec["width"], pii_pos)
     if spec["regex"]:
         return any(c.search(src) for c in spec["value"])
     return any(c in src for c in spec["value"])

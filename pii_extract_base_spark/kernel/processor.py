@@ -171,10 +171,12 @@ class PiiProcessor:
             if id(task) in processed:
                 continue
             processed.add(id(task))
+            info = None     # the task's header dict, built once per chunk
             for pii in task(chunk):
                 set_pii_stage(pii)
-                piilist.append((pii, task.task_info,
-                                task.get_method(pii.info)))
+                if info is None:
+                    info = task.task_info.asdict()
+                piilist.append((pii, info, task.get_method(pii.info)))
                 self._stats["num"]["entities"] += 1
                 self._stats["entities"][pii.info.pii.name] += 1
 

@@ -7,8 +7,11 @@ fixed here so Spark engine and oracle agree by construction:
  - overlap resolution: a span is DROPPED if it starts before the end of
    the previously kept span (inner/overlapping spans lose to the earlier,
    longer-at-same-start span)
- - kept spans replaced right-to-left with ``<TYPE>`` placeholders so
-   earlier offsets stay valid — deterministic ⇒ byte-identical output.
+ - kept spans replaced by ``<TYPE>`` placeholders in one left-to-right
+   join of the text between them, O(text + spans) — deterministic ⇒
+   byte-identical output. The join is exact only for spans inside the
+   text, so a span with ``start < 0``, ``end < start`` or
+   ``end > len(text)`` raises ``ValueError``.
 """
 
 from typing import Iterable, List, Tuple
@@ -29,7 +32,17 @@ def resolve_spans(spans: Iterable[Span]) -> List[Span]:
 
 
 def scrub_text(text: str, spans: Iterable[Span]) -> str:
-    """Replace each resolved span with ``<TYPE>``, applied right-to-left."""
-    for start, end, typ in reversed(resolve_spans(spans)):
-        text = text[:start] + "<" + typ + ">" + text[end:]
-    return text
+    """Replace each resolved span with ``<TYPE>``; ValueError on a span
+    outside ``text``."""
+    spans = list(spans)
+    n = len(text)
+    for s in spans:
+        if not 0 <= s[0] <= s[1] <= n:
+            raise ValueError(f"span {s[:2]} is outside a text of length {n}")
+    out = []
+    pos = 0
+    for start, end, typ in resolve_spans(spans):
+        out += (text[pos:start], "<", typ, ">")
+        pos = end
+    out.append(text[pos:])
+    return "".join(out)

@@ -63,19 +63,21 @@ def get_processor(languages: Tuple[str, ...],
 
 def entity_dict(pii, piic: PiiCollectionBuilder) -> Dict:
     """One entity of `piic` as a dict with ENTITY_FIELDS; its
-    ``detector`` is the collection's dense first-use id."""
-    d = pii.asdict()
+    ``detector`` is the collection's dense first-use id. Read from the
+    entity's fields as ``PiiEntity.asdict`` resolves them."""
+    f = pii.fields
+    det = f["detector"]
     return {
-        "type": d["type"],
-        "subtype": d.get("subtype"),
-        "value": d["value"],
-        "start": d["start"],
-        "end": d["end"],
-        "lang": d.get("lang"),
-        "country": d.get("country"),
-        "detector": d["detector"],
-        "method": piic.get_detector(d["detector"]).method,
-        "stage": d.get("process", {}).get("stage"),
+        "type": pii.info.pii.name,
+        "subtype": pii.info.subtype,
+        "value": pii.value,
+        "start": pii.pos,
+        "end": pii.pos + len(pii.value),
+        "lang": f.get("lang") or pii.info.lang,
+        "country": f.get("country") or pii.info.country,
+        "detector": det,
+        "method": piic.get_detector(det).method,
+        "stage": (f.get("process") or {}).get("stage"),
     }
 
 

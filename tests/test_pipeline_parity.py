@@ -127,8 +127,9 @@ def test_whitespace_pages_match_oracle(whitespace_results, case):
 
 # (text, lang) pages the synthetic corpus never holds: a row language
 # outside the pipeline's languages (its PII is not detected, as in the
-# oracle), a page of digits with no whitespace at all, and a ~1 MB page
-# with no newline and an email and a card number every ~190 bytes
+# oracle), a page of digits with no whitespace at all, a ~1 MB page
+# with no newline and an email and a card number every ~190 bytes, and
+# a ~0.8 MB page with a context-checked phone every ~95 bytes
 EDGE_CASES = {
     "lang_outside_set": (
         "la gente della città è andata al mercato e ha comprato il pane "
@@ -140,6 +141,10 @@ EDGE_CASES = {
         f"bread with the money that they had saved, mail "
         f"anna.berg{i}@example.com or pay by card 4111 1111 1111 1111 "
         f"before the week ends. " for i in range(5_400)), "en"),
+    "dense_phones": ("".join(
+        f"for orders and returns call the shop on phone +44 20 7946 "
+        f"{i % 10_000:04d} between nine and five each day. "
+        for i in range(8_500)), "en"),
 }
 
 
