@@ -1233,13 +1233,15 @@ def q71_bpe_merges(spark, sf_dir):
     """BPE tokenizer training, inner loop (operators/bpe): 6 most
     frequent adjacent-symbol merges fitted on the distinct-word
     frequency table (the classic vocabulary-not-corpus scaling trick).
-    Per round: one pair-explode + hash aggregate + a single collected
-    row (O(1) driver state, the kmeans/LR/PageRank contract), merge
-    applied as a native string replace. The merge TABLE is the model;
-    DuckDB replays every round as unrolled MATERIALIZED CTEs."""
+    One merge per round (batch=1): one pair-explode + hash aggregate +
+    the top few collected rows (O(1) driver state, the kmeans/LR/
+    PageRank contract), merge applied as a native string replace. The
+    merge TABLE is the model; DuckDB replays every round as unrolled
+    MATERIALIZED CTEs."""
     from pii_extract_base_spark.operators.bpe import bpe_train
     docs = _t(spark, sf_dir, "documents")
-    merges = bpe_train(docs, "text", rounds=6)
+    merges = bpe_train(docs, "text", num_merges=6, batch=1,
+                       min_count=1)
     return spark.createDataFrame(merges,
                                  "round long, pair string, cnt long")
 
@@ -1260,7 +1262,8 @@ def q72_bpe_token_stats(spark, sf_dir):
         bpe_encode_count_arrow, bpe_train)
     from pii_extract_base_spark.functions.textstats import token_count
     docs = _t(spark, sf_dir, "documents")
-    merges = bpe_train(docs, "text", rounds=6)
+    merges = bpe_train(docs, "text", num_merges=6, batch=1,
+                       min_count=1)
     # manual projection: mapInPandas is a column-pruning barrier, so
     # hand it only the two columns the query needs
     out = bpe_encode_count_arrow(docs.select("doc_id", "text"), merges)
@@ -2214,7 +2217,8 @@ def q92_tokenizer_eval(spark, sf_dir):
         bpe_encode_count_arrow, bpe_train)
     from pii_extract_base_spark.functions.textstats import token_count
     docs = _t(spark, sf_dir, "documents")
-    merges = bpe_train(docs, "text", rounds=6)
+    merges = bpe_train(docs, "text", num_merges=6, batch=1,
+                       min_count=1)
     enc = bpe_encode_count_arrow(docs.select("doc_id", "lang", "text"),
                                  merges)
     chars = F.length(F.coalesce(F.col("text"), F.lit("")))
@@ -2377,7 +2381,8 @@ def q95_bpe_packed_examples(spark, sf_dir):
     from pii_extract_base_spark.operators.sharding import (
         materialize_examples)
     docs = _t(spark, sf_dir, "documents")
-    merges = bpe_train(docs, "text", rounds=6)
+    merges = bpe_train(docs, "text", num_merges=6, batch=1,
+                       min_count=1)
     # the writer references its input twice (span map + token side):
     # cut lineage so the Arrow encode runs ONCE, not once per subtree
     # (the q77 lesson — never re-run the expensive Python crossing
@@ -2478,9 +2483,10 @@ def q100_ccnet_ppl_buckets(spark, sf_dir):
     functions/sampling.quantile_buckets): label every page with its
     per-language perplexity tercile under the q63 en-LM score — the
     classic pre-training layout ('train on head+middle, sample
-    tail'). Each tercile cut is the two-phase histogram selection
-    (quantile_cut_scalable — no per-language sort), and the nested
-    kept sets compose into one label via hash joins on doc_id."""
+    tail'). Both tercile cuts come from one two-phase histogram pass
+    (no per-language sort): one cutoff aggregate finds each cut's bin
+    and residual rank, and each row's label is the number of cuts its
+    rank falls beyond — no join back on doc_id."""
     from pii_extract_base_spark.functions.ppl_sql import ppl_sql
     from pii_extract_base_spark.functions.sampling import (
         quantile_buckets)

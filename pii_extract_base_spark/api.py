@@ -11,7 +11,6 @@ operators/detect.py over a DataFrame, sharing the same kernel.
 
 import json
 import sys
-from pathlib import Path
 from typing import Dict, Iterable, List, Optional
 
 from .kernel.defs import FMT_CONFIG_TASKCFG, FMT_CONFIG_TASKS
@@ -21,7 +20,7 @@ from .kernel.task import DocumentChunk
 from .registry.config_loader import load_module_config
 from .registry.detectors import builtin_tasklist
 from .registry.plugin_source import PluginTaskSource
-from .sinks.collection_json import piic_format
+from .sinks.collection_json import base_extension, piic_format
 
 SRC_DOC_FORMAT = "piisa:src-document:v1"
 
@@ -51,19 +50,11 @@ def openfile(path, mode: str = "rt"):
     return open(path, mode, encoding="utf-8")
 
 
-def _base_extension(path) -> str:
-    """Extension ignoring a trailing .gz (pii-data base_extension)."""
-    sfx = Path(path).suffixes
-    if sfx and sfx[-1] == ".gz":
-        sfx = sfx[:-1]
-    return sfx[-1].lower() if sfx else ""
-
-
 def load_source_document(infile) -> SrcDocument:
     """Load a YAML/JSON source document file into a SrcDocument."""
     with openfile(infile) as f:
         text = f.read()
-    if _base_extension(infile) in (".yaml", ".yml"):
+    if base_extension(infile) in (".yaml", ".yml"):
         import yaml
         data = yaml.safe_load(text)
     else:

@@ -69,56 +69,72 @@ def score_bin(score: Column, lo: Column, hi: Column, bins: int) -> Column:
     ).otherwise(F.lit(0))
 
 
-def _top_quota(base: DataFrame, group_col: str, quota: Column,
-               order) -> DataFrame:
-    """The first ``quota`` rows of each ``group_col`` group under the
-    total order ``order``, with no sort of a whole group — the
-    selection every top-quota sampler here runs. ``base`` carries
+def _quota_bands(base: DataFrame, group_col: str, quotas,
+                 order) -> DataFrame:
+    """Rank each ``group_col`` group under the total order ``order``
+    against nondecreasing ``quotas`` (Columns constant within a
+    group), with no sort of a whole group: ``_band`` is the number of
+    quotas the row's rank falls beyond. The top-quota samplers keep
+    band 0; ``quantile_buckets`` labels every band. ``base`` carries
     ``_bin``, a long that ascends with ``order`` and is an order-
-    prefix of it; ``quota`` is constant within a group.
+    prefix of it.
 
       1. histogram: groupBy(group, _bin).count() — map-side combined,
-         so a heavy group shrinks to one row per bin however many
-         rows it owns; the only corpus-wide aggregate.
-      2. cutoff: a running count over each group's histogram finds
-         the first bin ``_cutbin`` where it reaches the quota, and the
-         residual rank ``_rem`` inside it. A group that never reaches
-         its quota gets no cutoff row and is kept whole.
-      3. keep: rows below the cutoff bin pass by a broadcast filter
-         (one cutoff row per group that reaches its quota); only the
-         boundary tie band (``_bin == _cutbin``, expected n/65536 rows
-         for md5 or score bins) pays an exact row_number window.
+         so a heavy group shrinks to one row per bin; the only
+         corpus-wide aggregate.
+      2. cutoffs: a running count over each group's histogram, then
+         ONE aggregate finds, for every quota i, the first bin
+         ``_cutbin{i}`` where the count reaches it and the residual
+         rank ``_rem{i}`` inside it. A group that never reaches
+         quotas[0] gets no row, so the relation is small and
+         broadcasts.
+      3. bands: a row outside every cutoff bin takes its band from
+         bin comparisons alone; only the rows in a cutoff bin
+         (expected n/65536 each for md5 or score bins) pay an exact
+         row_number, partitioned by (group, _bin).
 
-    Because ``_bin`` is an order-prefix, the kept set is exactly the
+    Because ``_bin`` is an order-prefix, every band is exactly the
     naive per-group row_number window's, so a DuckDB replay (a plain
-    rank window at eval scale) hash-matches. NULL groups are a group
-    of their own (null-safe joins). Returns ``base``'s columns less
-    ``_bin``."""
+    rank window) hash-matches. NULL groups are a group of their own
+    (null-safe joins). Returns ``base``'s columns less ``_bin``, plus
+    ``_band``."""
     from pyspark.sql import Window
+    k = len(quotas)
     hist = base.groupBy(group_col, "_bin").agg(
-        F.count("*").alias("_c"), F.first(quota).alias("_q"))
+        F.count("*").alias("_c"),
+        *[F.first(q).alias(f"_q{i}") for i, q in enumerate(quotas)])
     wcum = (Window.partitionBy(group_col).orderBy("_bin")
                   .rowsBetween(Window.unboundedPreceding,
                                Window.currentRow))
     cum = hist.withColumn("_cum", F.sum("_c").over(wcum))
-    cut = (cum.where(F.col("_cum") >= F.col("_q"))
-              .groupBy(group_col).agg(F.min("_bin").alias("_cutbin"))
-              .withColumnRenamed(group_col, "_g"))
-    rem = (cum.join(F.broadcast(cut),
-                    F.col(group_col).eqNullSafe(F.col("_g"))
-                    & (F.col("_bin") == F.col("_cutbin")))
-              .select("_g", "_cutbin",
-                      (F.col("_q") - (F.col("_cum") - F.col("_c")))
-                      .alias("_rem")))
-    joined = base.join(F.broadcast(rem),
+
+    def reached(i):
+        return F.when(F.col("_cum") >= F.col(f"_q{i}"), F.col("_bin"))
+
+    cutoffs = (cum.where(F.col("_cum") >= F.col("_q0"))
+                  .groupBy(F.col(group_col).alias("_g"))
+                  .agg(*[a for i in range(k) for a in (
+                      F.min(reached(i)).alias(f"_cutbin{i}"),
+                      F.min_by(F.col(f"_q{i}") - F.col("_cum")
+                               + F.col("_c"), reached(i))
+                       .alias(f"_rem{i}"))]))
+    joined = base.join(F.broadcast(cutoffs),
                        F.col(group_col).eqNullSafe(F.col("_g")), "left")
-    below = joined.where(F.col("_cutbin").isNull()
-                         | (F.col("_bin") < F.col("_cutbin")))
-    wband = Window.partitionBy(group_col).orderBy(*order)
-    band = (joined.where(F.col("_bin") == F.col("_cutbin"))
-                  .withColumn("_rn", F.row_number().over(wband))
-                  .where(F.col("_rn") <= F.col("_rem")).drop("_rn"))
-    return below.unionByName(band).drop("_bin", "_g", "_cutbin", "_rem")
+    at_cut = F.lit(False)
+    for i in range(k):
+        at_cut = at_cut | F.col("_bin").eqNullSafe(F.col(f"_cutbin{i}"))
+    wband = Window.partitionBy(group_col, "_bin").orderBy(*order)
+    ranked = (joined.where(~at_cut)
+                    .withColumn("_rn", F.lit(None).cast("int"))
+                    .unionByName(joined.where(at_cut).withColumn(
+                        "_rn", F.row_number().over(wband))))
+    band = sum(F.coalesce((F.col("_bin") > F.col(f"_cutbin{i}"))
+                          | ((F.col("_bin") == F.col(f"_cutbin{i}"))
+                             & (F.col("_rn") > F.col(f"_rem{i}"))),
+                          F.lit(False)).cast("int") for i in range(k))
+    return (ranked.withColumn("_band", band).drop(
+        "_bin", "_g", "_rn", *[f"_{c}{i}" for i in range(k)
+                               for c in ("cutbin", "rem")]))
 
 
 def accept_at_rates(df: DataFrame, strata_col: str, key_col: str,
@@ -222,6 +238,36 @@ def quantile_cut_approx(df: DataFrame, strata_col: str, score_col: str,
               .drop("_thr"))
 
 
+def _quantile_bands(df: DataFrame, strata_col: str, score_col: str,
+                    fracs, tiebreak_col: str,
+                    ascending: bool) -> DataFrame:
+    """``_quota_bands`` of the non-NULL-score rows under the quotas
+    max(1, floor(f·n_s + 1e-9)) for f in ``fracs``, ordered by (score
+    asc or desc, tiebreak asc), binned by ``score_bin`` between each
+    stratum's min and max (flipped when descending), so score ties at
+    a boundary share one bin and the tiebreak resolves them there."""
+    sc = F.col(score_col).cast("double")
+    base = df.where(sc.isNotNull())
+    ext = base.groupBy(strata_col).agg(
+        F.count("*").alias("_n"), F.min(sc).alias("_mn"),
+        F.max(sc).alias("_mx"))
+    b = score_bin(sc, F.col("_mn"), F.col("_mx"), COARSE_BUCKETS)
+    scored = (base.join(F.broadcast(
+                        ext.withColumnRenamed(strata_col, "_s0")),
+                        F.col(strata_col).eqNullSafe(F.col("_s0")))
+                  .drop("_s0")
+                  .withColumn("_bin", b if ascending
+                              else F.lit(COARSE_BUCKETS - 1) - b))
+    quotas = [F.greatest(F.lit(1).cast("long"),
+                         F.floor(F.lit(float(f)) * F.col("_n")
+                                 + F.lit(1e-9)).cast("long"))
+              for f in fracs]
+    order = [F.asc(score_col) if ascending else F.desc(score_col),
+             F.asc(tiebreak_col)]
+    return (_quota_bands(scored, strata_col, quotas, order)
+            .drop("_n", "_mn", "_mx"))
+
+
 def quantile_cut_scalable(df: DataFrame, strata_col: str, score_col: str,
                           keep_frac: float, tiebreak_col: str,
                           ascending: bool = False) -> DataFrame:
@@ -236,11 +282,8 @@ def quantile_cut_scalable(df: DataFrame, strata_col: str, score_col: str,
     — or asc —, tiebreak asc); the +1e-9 is ``mixture_quotas``' exact-
     arithmetic rule (a bare IEEE product turns 0.4·250 into
     100.000…01, which ceil/int would mis-round by one), and the
-    max(1,·) keeps every non-empty stratum represented. The selection
-    is ``_top_quota`` over ``score_bin``'s 65536 bins between each
-    stratum's min and max score (flipped for a descending cut), so
-    all score ties at the boundary land in one bin and the tiebreak
-    resolves them there.
+    max(1,·) keeps every non-empty stratum represented. The kept set
+    is band 0 of ``_quantile_bands``.
 
     Degenerate stratum (min == max): every row is one bin → the band
     is the whole stratum and the window sorts it all; a constant-score
@@ -258,25 +301,9 @@ def quantile_cut_scalable(df: DataFrame, strata_col: str, score_col: str,
     other changes the kept set at the boundary."""
     if not 0.0 < keep_frac <= 1.0:
         raise ValueError(f"keep_frac out of (0,1]: {keep_frac}")
-    sc = F.col(score_col).cast("double")
-    base = df.where(sc.isNotNull())
-    ext = base.groupBy(strata_col).agg(
-        F.count("*").alias("_n"), F.min(sc).alias("_mn"),
-        F.max(sc).alias("_mx"))
-    b = score_bin(sc, F.col("_mn"), F.col("_mx"), COARSE_BUCKETS)
-    scored = (base.join(F.broadcast(
-                        ext.withColumnRenamed(strata_col, "_s0")),
-                        F.col(strata_col).eqNullSafe(F.col("_s0")))
-                  .drop("_s0")
-                  .withColumn("_bin", b if ascending
-                              else F.lit(COARSE_BUCKETS - 1) - b))
-    quota = F.greatest(F.lit(1).cast("long"),
-                       F.floor(F.lit(float(keep_frac)) * F.col("_n")
-                               + F.lit(1e-9)).cast("long"))
-    order = [F.asc(score_col) if ascending else F.desc(score_col),
-             F.asc(tiebreak_col)]
-    return (_top_quota(scored, strata_col, quota, order)
-            .drop("_n", "_mn", "_mx"))
+    return (_quantile_bands(df, strata_col, score_col, [keep_frac],
+                            tiebreak_col, ascending)
+            .where(F.col("_band") == 0).drop("_band"))
 
 
 def per_key_cap(df: DataFrame, key_col: str, cap: int,
@@ -308,8 +335,8 @@ def per_key_cap_scalable(df: DataFrame, key_col: str, cap: int,
     handing any reducer a whole key: ``per_key_cap``'s row_number
     window sorts each key inside one task, so the one boilerplate
     domain that owns 10% of a crawl becomes a single straggler task.
-    The selection is ``_top_quota`` over the md5-prefix bucket, so the
-    kept set is bit-identical to the naive window's.
+    The kept set is band 0 of ``_quota_bands`` over the md5-prefix
+    bucket, so it is bit-identical to the naive window's.
 
     Keys with n ≤ cap are kept whole. The cutoff relation has one row
     per key EXCEEDING the cap — in a crawl, the small heavy-hitter set
@@ -319,9 +346,9 @@ def per_key_cap_scalable(df: DataFrame, key_col: str, cap: int,
         raise ValueError(f"cap must be >= 1: {cap}")
     h, b = _md5_order_cols(id_col)
     base = df.withColumn("_h", h).withColumn("_bin", b)
-    return (_top_quota(base, key_col, F.lit(cap),
-                       [F.asc("_h"), F.asc(id_col)])
-            .drop("_h"))
+    return (_quota_bands(base, key_col, [F.lit(cap)],
+                         [F.asc("_h"), F.asc(id_col)])
+            .where(F.col("_band") == 0).drop("_h", "_band"))
 
 
 def mixture_quotas(shares: dict, budget: int) -> Dict[str, int]:
@@ -352,8 +379,8 @@ def mixture_sample(df: DataFrame, strata_col: str, key_col: str,
     Scale shape — NO full-stratum sort. Mixing runs over the entire
     kept corpus, last, with stratum = data SOURCE (cardinality ~5), so
     a per-stratum row_number window would hand one reducer task an
-    entire source; the pick is ``_top_quota`` over the md5-prefix
-    bucket instead. Output columns keep ``df``'s order.
+    entire source; the pick is band 0 of ``_quota_bands`` over the
+    md5-prefix bucket instead. Output columns keep ``df``'s order.
     """
     if budget < 1:
         raise ValueError(f"budget must be >= 1: {budget}")
@@ -368,9 +395,9 @@ def mixture_sample(df: DataFrame, strata_col: str, key_col: str,
     h, b = _md5_order_cols(key_col)
     base = (df.where(F.col(strata_col).isin(list(shares)))
               .withColumn("_h", h).withColumn("_bin", b))
-    return (_top_quota(base, strata_col, quota.otherwise(F.lit(0)),
-                       [F.asc("_h"), F.asc(key_col)])
-            .drop("_h"))
+    return (_quota_bands(base, strata_col, [quota.otherwise(F.lit(0))],
+                         [F.asc("_h"), F.asc(key_col)])
+            .where(F.col("_band") == 0).drop("_h", "_band"))
 
 
 def weighted_sample(df: DataFrame, key_col: str,
@@ -457,17 +484,20 @@ def quantile_buckets(df: DataFrame, strata_col: str, score_col: str,
     ``fracs`` are strictly increasing cumulative cut points (e.g.
     (1/3, 2/3)) and ``labels`` has len(fracs)+1 entries: rows ranked
     within fracs[0] of their stratum get labels[0], within fracs[1]
-    labels[1], …, the remainder labels[-1]. Each cut reuses
-    ``quantile_cut_scalable`` — the kept sets are NESTED by
-    construction (each is the top-quota prefix of the same total
-    order: score asc/desc, tiebreak asc), so membership tests compose
-    into one label expression. Same quota rule as that cut
-    (max(1, floor(frac·n + 1e-9)) rows per stratum).
+    labels[1], …, the remainder labels[-1]. Same quota rule as
+    ``quantile_cut_scalable`` (max(1, floor(frac·n + 1e-9)) rows per
+    stratum, under score asc/desc, tiebreak asc): the buckets are the
+    bands between those nested top-quota prefixes of one total order,
+    so band i is labels[i]. NULL scores are not rankable: they take
+    labels[-1] (stated so the oracle agrees). NULL strata are a
+    stratum of their own.
 
-    NULL scores are not rankable: they take labels[-1] (stated so the
-    oracle agrees). Plan shape: one corpus scan + two-phase histogram
-    per cut, then len(fracs) hash joins on the UNIQUE ``tiebreak_col``
-    — no broadcast of corpus-sized sets, no per-stratum global sort
+    Plan shape: every cut point comes from ONE pass — one extents
+    aggregate, one (stratum, bin) histogram with one running count,
+    and one cutoff aggregate that finds each cut's bin and residual
+    rank, broadcast back; only the rows in a cut's boundary bin pay a
+    row_number. The aggregates, windows and shuffles are the same for
+    one cut point or three, and no per-stratum global sort runs
     anywhere."""
     fl = list(fracs)
     if len(labels) != len(fl) + 1:
@@ -475,30 +505,21 @@ def quantile_buckets(df: DataFrame, strata_col: str, score_col: str,
                          f"{len(labels)} for {len(fl)} fracs")
     if any(b <= a for a, b in zip(fl, fl[1:])):
         raise ValueError(f"fracs must be strictly increasing: {fl}")
-    # materialize the input ONCE: each cut scans it ~3× (extents,
-    # histogram, band join) and each kept set joins back against it,
-    # so an expensive upstream (e.g. the --ccnet-keep LM fit+score
-    # join) would otherwise re-run 6-8× per call. LAZY, so composing
-    # or explaining the plan fires no job — the first real action
-    # materializes it and the remaining scans hit the checkpoint.
+    # materialize the input ONCE: the pass scans it ~4× (extents,
+    # histogram, band join, NULL scores), so an expensive upstream
+    # (e.g. the --ccnet-keep LM fit+score join) would otherwise re-run
+    # per scan. LAZY, so composing or explaining the plan fires no
+    # job — the first real action materializes it and the remaining
+    # scans hit the checkpoint.
     df = df.localCheckpoint(eager=False)
-    out = df
-    flags = []
-    for i, fr in enumerate(fl):
-        kept = quantile_cut_scalable(df, strata_col, score_col, fr,
-                                     tiebreak_col, ascending=ascending)
-        flag = f"_qb{i}"
-        flags.append(flag)
-        out = out.join(kept.select(F.col(tiebreak_col),
-                                   F.lit(True).alias(flag)),
-                       tiebreak_col, "left")
-    expr = None
-    for flag, label in zip(flags, labels):
-        cond = F.coalesce(F.col(flag), F.lit(False))
-        expr = (F.when(cond, label) if expr is None
-                else expr.when(cond, label))
-    expr = expr.otherwise(labels[-1])
-    return out.withColumn(bucket_col, expr).drop(*flags)
+    names = F.array(*[F.lit(label) for label in labels])
+    ranked = (_quantile_bands(df, strata_col, score_col, fl,
+                              tiebreak_col, ascending)
+              .withColumn(bucket_col, names[F.col("_band")])
+              .drop("_band"))
+    unranked = (df.where(F.col(score_col).cast("double").isNull())
+                  .withColumn(bucket_col, F.lit(labels[-1])))
+    return ranked.unionByName(unranked)
 
 
 def split_thresholds(fracs) -> list:

@@ -12,10 +12,11 @@ corpus-sized shuffle; everything after is:
 
   per round: explode adjacent symbol pairs (weighted by word count)
              → map-side-combinable hash aggregate
-             → top-1 (count desc, pair asc — deterministic tie-break)
-             → ONE collected row (the iterative-ML driver-loop
-               contract: O(1) state per round, like kmeans/LR/PageRank)
-             → apply the merge as a plain string replace on the
+             → top candidates (count desc, pair asc — deterministic
+               tie-break) → a few collected rows (the iterative-ML
+               driver-loop contract: O(batch) state per round, like
+               kmeans/LR/PageRank)
+             → apply the merges as plain string replaces on the
                symbol column, localCheckpoint, repeat.
 
 Symbol encoding: words are rendered as space-joined characters with
@@ -48,36 +49,6 @@ def _sym_col(word: Column) -> Column:
 def _pair_col(sym: Column) -> Column:
     """All adjacent symbol pairs ('a b'), multiplicity kept."""
     return word_windows(F.split(F.trim(sym), " "), 2)
-
-
-def bpe_train(df: DataFrame, text_col: str = "text",
-              rounds: int = 6) -> List[Tuple[int, str, int]]:
-    """Fit ``rounds`` BPE merges; returns [(round, "a b", count), ...].
-
-    The merge list IS the tokenizer model (applied in order at encode
-    time).  Deterministic: integer counts, total-order tie-break."""
-    wf = (df.select(F.explode(words_col(text_col)).alias("w"))
-            .groupBy("w").agg(F.count("*").alias("n")))
-    cur = (wf.select("w", "n", _sym_col(F.col("w")).alias("sym"))
-             .localCheckpoint())
-    merges: List[Tuple[int, str, int]] = []
-    for r in range(1, rounds + 1):
-        top = (cur.select("n", F.explode(_pair_col(F.col("sym")))
-                          .alias("pair"))
-                  .groupBy("pair").agg(F.sum("n").alias("cnt"))
-                  .orderBy(F.desc("cnt"), F.asc("pair"))
-                  .limit(1).collect())
-        if not top:
-            break
-        pair, cnt = top[0]["pair"], int(top[0]["cnt"])
-        merges.append((r, pair, cnt))
-        merged = pair.replace(" ", "")
-        cur = (cur.withColumn(
-                   "sym",
-                   F.replace(F.col("sym"), F.lit(f" {pair} "),
-                             F.lit(f" {merged} ")))
-                  .localCheckpoint())
-    return merges
 
 
 def bpe_encode_count(df: DataFrame, merges, text_col: str = "text",
@@ -252,20 +223,21 @@ def bpe_encode_arrow(df: DataFrame, merges, text_col: str = "text",
         lambda vs: [t for v in vs for t in v])
 
 
-def bpe_train_batched(df: DataFrame, text_col: str = "text",
-                      num_merges: int = 1000, batch: int = 64,
-                      min_count: int = 2) -> List[Tuple[int, str, int]]:
-    """Batched BPE training — the production fit loop. `bpe_train`
-    runs 2 Spark jobs per merge, fine for the ≤10-merge oracle demo
-    but 10k–50k driver round-trips at a real vocabulary size. This
-    variant fits up to ``batch`` merges per round:
+def bpe_train(df: DataFrame, text_col: str = "text",
+              num_merges: int = 1000, batch: int = 64,
+              min_count: int = 2) -> List[Tuple[int, str, int]]:
+    """Fit up to ``num_merges`` BPE merges; returns [(round, "a b",
+    count), ...] — the merge list IS the tokenizer model (applied in
+    order at encode time). Deterministic: integer counts, total-order
+    tie-break. Fits up to ``batch`` merges per round:
 
       per round: ONE pair-count job (explode adjacent pairs over the
-      distinct-word table, weighted hash aggregate) → collect the top
-      4·batch candidates (count desc, pair asc) → greedily keep pairs
-      whose SYMBOLS ARE DISJOINT from every pair already kept this
-      round → apply all kept merges as one chained-replace projection
-      + localCheckpoint.
+      distinct-word table, weighted hash aggregate, pairs seen fewer
+      than ``min_count`` times dropped) → collect the top 4·batch
+      candidates (count desc, pair asc) → greedily keep pairs whose
+      SYMBOLS ARE DISJOINT from every pair already kept this round →
+      apply all kept merges as one chained-replace projection +
+      localCheckpoint.
 
     Disjoint symbols make the batch exact w.r.t. its own counts:
     merging (a,b) only destroys adjacencies touching a or b, so the
@@ -274,8 +246,11 @@ def bpe_train_batched(df: DataFrame, text_col: str = "text",
     ORDER at batch boundaries: a pair CREATED by this round's merges
     (e.g. ('ab','c')) cannot be picked until the next round even if
     its count would beat this round's lower picks — the standard
-    trade in scalable/batched BPE training. ``batch=1`` reproduces
-    `bpe_train` exactly (the parity test pins this).
+    trade in scalable/batched BPE training. ``batch=1, min_count=1``
+    is the textbook loop, one merge per round, that ``bpe_oracle_sql``
+    replays (q71); it runs 2 Spark jobs per merge, fine for a
+    ≤10-merge fit but 10k–50k driver round-trips at a real vocabulary
+    size.
 
     Driver state per round is O(batch) pairs; Spark jobs total
     ~num_merges/batch, independent of corpus size."""
@@ -315,26 +290,15 @@ def bpe_train_batched(df: DataFrame, text_col: str = "text",
     return merges
 
 
-def bpe_encode_count_sql(words_list_expr: str, merges) -> str:
-    """DuckDB rendering of `bpe_encode_count`'s count expression."""
-    pairs = [m[1] if isinstance(m, tuple) else m for m in merges]
-    enc = "' ' || array_to_string(regexp_extract_all(w, '.'), ' ') || ' '"
-    for pair in pairs:
-        merged = pair.replace(" ", "")
-        enc = f"replace({enc}, ' {pair} ', ' {merged} ')"
-    return (f"coalesce(list_sum(list_transform({words_list_expr}, "
-            f"w -> len(string_split(trim({enc}), ' ')))), 0)::BIGINT")
-
-
 def bpe_oracle_sql(words_list_expr: str, table: str = "documents",
                    rounds: int = 6, final_select: str = None) -> str:
-    """DuckDB replay of `bpe_train` as unrolled MATERIALIZED CTE
-    rounds over the same word-frequency table.  ``words_list_expr``
-    must be the engine's word-list expression over ``table``'s text
-    column (the caller supplies the same tokenization the Spark side
-    uses).  ``final_select`` overrides the trailing merge-table UNION
-    (it may reference any ``m{r}`` CTE — e.g. to encode with the
-    fitted merges)."""
+    """DuckDB replay of `bpe_train(batch=1, min_count=1)` as unrolled
+    MATERIALIZED CTE rounds over the same word-frequency table.
+    ``words_list_expr`` must be the engine's word-list expression over
+    ``table``'s text column (the caller supplies the same tokenization
+    the Spark side uses).  ``final_select`` overrides the trailing
+    merge-table UNION (it may reference any ``m{r}`` CTE — e.g. to
+    encode with the fitted merges)."""
     pairs_of = (
         "CASE WHEN len(a) >= 2 THEN list_transform(range(len(a) - 1), "
         "i -> a[i+1] || ' ' || a[i+2]) ELSE [] END")

@@ -12,13 +12,19 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 
 
-def piic_format(path: str) -> str:
-    """Choose output format by file extension, ignoring a trailing .gz
-    (reference api/file.py:53-68 via pii-data base_extension)."""
+def base_extension(path) -> str:
+    """Lower-cased last extension, ignoring a trailing .gz (pii-data
+    base_extension)."""
     sfx = [s.lower() for s in Path(path).suffixes]
     if sfx and sfx[-1] == ".gz":
         sfx = sfx[:-1]
-    last = sfx[-1] if sfx else ""
+    return sfx[-1] if sfx else ""
+
+
+def piic_format(path: str) -> str:
+    """Choose output format by file extension (reference
+    api/file.py:53-68)."""
+    last = base_extension(path)
     if last in (".ndjson", ".jsonl"):
         return "ndjson"
     if last == ".json":

@@ -30,6 +30,12 @@ def _python_bpe(texts, rounds):
     return merges
 
 
+def _textbook(df, n):
+    """One merge per round, every pair a candidate: the loop the
+    Python reference and the DuckDB replay implement."""
+    return bpe_train(df, "text", num_merges=n, batch=1, min_count=1)
+
+
 TEXTS = [
     "low low low lower lowest",
     "new newer newest low",
@@ -39,7 +45,7 @@ TEXTS = [
 
 def test_bpe_matches_python_reference(spark):
     df = spark.createDataFrame([(t,) for t in TEXTS], "text string")
-    got = bpe_train(df, "text", rounds=8)
+    got = _textbook(df, 8)
     want = _python_bpe(TEXTS, rounds=8)
     assert got == want
 
@@ -47,7 +53,7 @@ def test_bpe_matches_python_reference(spark):
 def test_bpe_first_merges_hand_checked(spark):
     df = spark.createDataFrame([("low low low lower lowest",)],
                                "text string")
-    got = bpe_train(df, "text", rounds=3)
+    got = _textbook(df, 3)
     # l-o and o-w both occur 5x; tie breaks to 'l o'; then 'lo w' wins;
     # then 'low e' (2x in lower/lowest)
     assert got[0] == (1, "l o", 5)
@@ -58,7 +64,7 @@ def test_bpe_first_merges_hand_checked(spark):
 def test_bpe_oracle_replays_trainer(spark):
     duckdb = pytest.importorskip("duckdb")
     df = spark.createDataFrame([(t,) for t in TEXTS], "text string")
-    got = bpe_train(df, "text", rounds=6)
+    got = _textbook(df, 6)
     con = duckdb.connect()
     con.execute("CREATE TABLE docs (text VARCHAR)")
     con.executemany("INSERT INTO docs VALUES (?)", [(t,) for t in TEXTS])
@@ -83,7 +89,7 @@ def test_bpe_encode_count_matches_python(spark):
 
     df = spark.createDataFrame([(i, t) for i, t in enumerate(TEXTS)],
                                "i long, text string")
-    merges = bpe_train(df, "text", rounds=6)
+    merges = _textbook(df, 6)
     pairs = [p for _, p, _ in merges]
     got = {r["i"]: r["n_bpe_tokens"] for r in
            bpe_encode_count(df, merges).collect()}
@@ -99,18 +105,17 @@ def test_bpe_encode_count_matches_python(spark):
 # Production path: batched training + Arrow encoder (round-4 additions)
 
 def test_batched_train_batch1_equals_sequential(spark):
-    """batch=1 must reproduce bpe_train exactly — same candidates,
-    same tie-break, same merge application."""
-    from pii_extract_base_spark.operators.bpe import bpe_train_batched
+    """batch=1 is the sequential loop — same candidates, same
+    tie-break, same merge application — in the batched reference and
+    in the Spark trainer."""
     df = spark.createDataFrame([(t,) for t in TEXTS], "text string")
-    seq = bpe_train(df, "text", rounds=8)
-    bat = bpe_train_batched(df, "text", num_merges=8, batch=1,
-                            min_count=1)
-    assert bat == seq
+    seq = _python_bpe(TEXTS, rounds=8)
+    assert _python_bpe_batched(TEXTS, 8, 1) == seq
+    assert _textbook(df, 8) == seq
 
 
 def _python_bpe_batched(texts, num_merges, batch):
-    """Pure-python replay of bpe_train_batched's documented algorithm:
+    """Pure-python replay of bpe_train's documented algorithm:
     per round, top-4·want candidates (count desc, pair asc), greedy
     symbol-disjoint pick, chained single-pass application."""
     wf = Counter(w for t in texts for w in t.split())
@@ -148,10 +153,9 @@ def test_batched_train_matches_python_reference(spark):
     """The Spark batched trainer replays the documented algorithm
     exactly — including greedy symbol-disjoint selection within a
     round and exact pre-round counts."""
-    from pii_extract_base_spark.operators.bpe import bpe_train_batched
     df = spark.createDataFrame([(t,) for t in TEXTS], "text string")
-    merges = bpe_train_batched(df, "text", num_merges=6, batch=6,
-                               min_count=1)
+    merges = bpe_train(df, "text", num_merges=6, batch=6,
+                       min_count=1)
     assert merges == _python_bpe_batched(TEXTS, 6, 6)
     assert len(merges) == 6
 
@@ -169,7 +173,7 @@ def test_arrow_encoder_matches_plan_literal(spark):
             TEXTS + ["", None, "zzz zzz",
                      "aaaa banana ababab", "aaa aaaa aaaaa aaaaaa"])],
         "doc_id long, text string")
-    merges = bpe_train(df, "text", rounds=6)
+    merges = _textbook(df, 6)
     lit = {r["doc_id"]: r["n_bpe_tokens"]
            for r in bpe_encode_count(df, merges).collect()}
     arrow = {r["doc_id"]: r["n_bpe_tokens"]
@@ -190,7 +194,7 @@ def test_arrow_array_encoder_matches_count_path(spark):
             TEXTS + ["", None, "aaaa banana ababab",
                      "aaa aaaa aaaaa aaaaaa"])],
         "doc_id long, text string")
-    merges = bpe_train(df, "text", rounds=6)
+    merges = _textbook(df, 6)
     pairs = _merge_pairs(merges)
     counts = {r["doc_id"]: r["n_bpe_tokens"]
               for r in bpe_encode_count_arrow(df, merges).collect()}
@@ -237,8 +241,7 @@ def test_thousand_merges_fast_and_plan_size_independent(spark):
     import random
     import time
     from contextlib import redirect_stdout
-    from pii_extract_base_spark.operators.bpe import (
-        bpe_encode_count_arrow, bpe_train_batched)
+    from pii_extract_base_spark.operators.bpe import bpe_encode_count_arrow
     rng = random.Random(7)
     words = ["".join(rng.choice("abcdefghij") for _ in range(12))
              for _ in range(3000)]
@@ -246,8 +249,8 @@ def test_thousand_merges_fast_and_plan_size_independent(spark):
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
                                "doc_id long, text string")
     t0 = time.time()
-    merges = bpe_train_batched(df, "text", num_merges=1000, batch=128,
-                               min_count=1)
+    merges = bpe_train(df, "text", num_merges=1000, batch=128,
+                       min_count=1)
     fit_sec = time.time() - t0
     assert len(merges) == 1000
     # seconds, not minutes; margin sized for a fully-contended box

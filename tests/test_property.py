@@ -6,6 +6,8 @@ The naive references ARE the semantics the operators claim:
  - asof_join: per-left-row argmax over right rows with ts <= left ts
  - range_join: the full inequality cross-filter
  - stratified_sample: per-row md5-bucket rule
+ - mixture_sample / quantile_cut_scalable / quantile_buckets: the
+   per-stratum rank-quota pick or label
 """
 
 import hashlib
@@ -200,3 +202,34 @@ def test_pack_examples_manifest_invariants(spark, lens, seq_len):
     assert all(r.n_tokens == seq_len for r in man[:-1])
     assert man[-1].n_tokens == total - seq_len * (n_ex - 1)
     assert sum(r.n_tokens for r in man) == total
+
+
+@given(rows=st.lists(st.tuples(st.integers(0, 500),
+                               st.sampled_from(["a", "b", None]),
+                               st.one_of(st.none(), st.integers(0, 3))),
+                     min_size=1, max_size=40, unique_by=lambda r: r[0]),
+       tiny=st.lists(st.one_of(st.none(), st.integers(0, 3)),
+                     min_size=1, max_size=3),
+       fracs=st.lists(st.sampled_from([0.1, 0.25, 1 / 3, 0.5, 2 / 3,
+                                       0.75, 0.9, 1.0]),
+                      min_size=1, max_size=3, unique=True).map(sorted),
+       ascending=st.booleans())
+@settings(**SETTINGS)
+def test_quantile_buckets_matches_naive(spark, rows, tiny, fracs,
+                                        ascending):
+    """Random strata with a NULL one, NULL scores, heavy ties (4 score
+    values), a 1-3 row stratum where max(1, ·) makes quotas equal,
+    both orders, 1 to 3 cut points."""
+    from pii_extract_base_spark.functions.sampling import (
+        quantile_buckets)
+    from tests.test_sampling_scalable import _naive_buckets
+    rows = [(i, g, None if sc is None else float(sc))
+            for i, g, sc in rows]
+    rows += [(1000 + j, "tiny", None if sc is None else float(sc))
+             for j, sc in enumerate(tiny)]
+    labels = [f"b{i}" for i in range(len(fracs) + 1)]
+    df = spark.createDataFrame(rows, "doc_id long, g string, s double")
+    got = {r["doc_id"]: r["bucket"] for r in
+           quantile_buckets(df, "g", "s", fracs, labels, "doc_id",
+                            ascending=ascending).collect()}
+    assert got == _naive_buckets(rows, fracs, labels, ascending)

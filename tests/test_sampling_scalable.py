@@ -353,14 +353,18 @@ def test_temperature_sample_validates(spark):
 # ---------------------------------------------------------------------------
 # quantile_buckets (r5: CCNet head/middle/tail layout)
 
-def _naive_buckets(rows, fracs, labels):
-    """Per stratum: rank by (score asc, id asc); label by the same
-    max(1, floor(frac·n + 1e-9)) cumulative quotas the cut uses."""
+def _naive_buckets(rows, fracs, labels, ascending=True):
+    """Per stratum: rank the non-NULL scores by (score asc|desc, id
+    asc); label by the same max(1, floor(frac·n + 1e-9)) cumulative
+    quotas the cut uses. NULL scores take the last label."""
     from collections import defaultdict
     by_s = defaultdict(list)
-    for rid, s, score in rows:
-        by_s[s].append((score, rid))
     want = {}
+    for rid, s, score in rows:
+        if score is None:
+            want[rid] = labels[-1]
+        else:
+            by_s[s].append((score if ascending else -score, rid))
     for s, members in by_s.items():
         members.sort()
         quotas = [max(1, math.floor(f * len(members) + 1e-9))
@@ -415,3 +419,23 @@ def test_quantile_buckets_validates(spark):
     with pytest.raises(ValueError):
         quantile_buckets(df, "g", "s", (0.5,), ("a", "b", "c"),
                          "doc_id")
+
+
+def test_quantile_buckets_plan_does_not_grow_with_cuts(spark):
+    """Every cut point comes from one histogram pass: 1, 2 and 3 cut
+    points plan the same aggregates, windows and shuffles (one more
+    cut used to add a histogram, a window and a join-back)."""
+    from pii_extract_base_spark.functions.sampling import (
+        quantile_buckets)
+    from pii_extract_base_spark.plans import count_nodes, formatted_plan
+    df = spark.createDataFrame(
+        [(i, f"l{i % 3}", float(i % 7)) for i in range(60)],
+        "doc_id long, g string, s double")
+    shapes = []
+    for fracs in ((0.5,), (1.0 / 3.0, 2.0 / 3.0), (0.25, 0.5, 0.75)):
+        labels = [f"b{i}" for i in range(len(fracs) + 1)]
+        plan = formatted_plan(quantile_buckets(df, "g", "s", fracs,
+                                               labels, "doc_id"))
+        shapes.append([count_nodes(plan, node) for node in
+                       ("HashAggregate", "Window", "Exchange")])
+    assert shapes[0] == shapes[1] == shapes[2], shapes
